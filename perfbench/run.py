@@ -2,7 +2,7 @@
 """Benchmark of the CDC engine: one workload, one run, one JSON result.
 
     python3 perfbench/run.py --workload streaming --seed 1 \
-        --seconds 14 --trace 0
+        --seconds 18 --trace 0
 
 Run from the repository root. The run generates its inputs from
 ``--seed``, starts one ``local[nproc]`` session, sets the workload up,
@@ -45,8 +45,6 @@ SIZES = {
             "cdc": {"backfill_rows": 60_000, "backfill_files": 5, "keys": 6_000,
                     "round_rows": 2_000},
             "topic": {"chunk_rows": 4_000, "departments": 1_000, "partitions": 4},
-            "rounds_per_cycle": 3,
-            "warm_blocks": 3,
         },
         "batch_queries": {"sf": 0.01},
     },
@@ -55,8 +53,6 @@ SIZES = {
             "cdc": {"backfill_rows": 4_000, "backfill_files": 2, "keys": 500,
                     "round_rows": 200},
             "topic": {"chunk_rows": 1_000, "departments": 50, "partitions": 2},
-            "rounds_per_cycle": 3,
-            "warm_blocks": 1,
         },
         "batch_queries": {"sf": 0.001},
     },
@@ -123,10 +119,14 @@ def isolate(tmp: str) -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     heap = os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     # the heap starts at its full size: a heap still growing after the
-    # warm-up makes the first timed operations pay for its collections
+    # warm-up makes the first timed operations pay for its collections.
+    # The JIT compiles after 5% of its default invocation counts: with
+    # the defaults, the compiled code arrives tens of seconds into the
+    # run, and its step (~25% on a CDC round) falls at a different
+    # operation from run to run
     os.environ["SPARK_GRAFT_DRIVER_JAVA_OPTS"] = (
         os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")
-        + f" -Xms{heap}"
+        + f" -Xms{heap} -XX:CompileThresholdScaling=0.05"
         + f" -Djava.io.tmpdir={os.path.join(tmp, 'tmp')}"
         + f" -Dderby.system.home={os.path.join(tmp, 'tmp')}"
     ).strip()
@@ -226,7 +226,7 @@ def run(args) -> dict:
         wl = WORKLOADS[args.workload](Ctx(spark, args.seed, tmp, tracer, untraced), sizes, tally)
         t1 = time.perf_counter()
         wl.setup()
-        warm_s = time.perf_counter() - t1
+        warm_s = time.perf_counter() - t1 - wl.check_s
         steal0, total0 = cpu_ticks()
         wl.run(args.seconds)
         steal1, total1 = cpu_ticks()

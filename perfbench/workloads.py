@@ -6,20 +6,20 @@ is spent), ``end_to_end()``, ``report()`` and ``layers(tracer)``.
 Reference checks run outside the timers; a mismatch or an exception
 counts as one failed operation and is never retried.
 
-* ``streaming`` alternates two paths on one session:
+* ``streaming`` interleaves two paths on one session:
   - the CDC path — op = one change round: commit a file of change
     events, apply it with ``CdcFileStreamPipeline.run_available_now``,
     read the replica (``snapshot()`` plus one aggregate action);
   - the topic path — op = one publish/consume cycle: publish a chunk of
     salary messages with ``EmbeddedLog.publish``, then drain it through
     decode -> stateful running totals -> ``foreachBatch`` sink.
-* ``batch_queries`` — op = one cold pass over the 11 registered queries
-  in a seed-shuffled order, each collected to Arrow.
+* ``batch_queries`` — op = one warm pass over the 11 registered queries
+  in a seed-shuffled order, each collected to Arrow; set-up runs one
+  untimed pass first.
 """
 
 from __future__ import annotations
 
-import itertools
 import os
 import random
 import statistics
@@ -101,6 +101,8 @@ class Part:
         self.tally = tally
         self.op_s: list[float] = []
         self.op_rows = 0
+        #: time set-up spent on reference checks, not counted in setup_s
+        self.check_s = 0.0
 
 
 # ---------------------------------------------------------------------------
@@ -353,10 +355,13 @@ class TopicPath(Part):
 
 
 class Streaming(Part):
-    """CDC rounds and topic cycles alternate on one session, so both
-    paths see the same host and JVM state. The CDC path gives the
-    latency (commit -> replica visible); throughput counts every row
-    both paths ingest (change events applied, messages consumed)."""
+    """CDC rounds and topic cycles interleave on one session, so both
+    paths see the same host and JVM state. Each next operation goes to
+    the path that has had less wall time so far: the two paths share
+    the window equally, and no fixed ratio of rounds to cycles weights
+    either one. Each path has its own end-to-end figure: the CDC path
+    the latency (commit -> replica visible), the topic path the
+    throughput (messages of one cycle / median cycle)."""
 
     name = "streaming"
 
@@ -365,45 +370,45 @@ class Streaming(Part):
         self.cdc = CdcPath(ctx, sizes["cdc"], tally)
         self.topic = TopicPath(ctx, sizes["topic"], tally)
 
-    def _schedule(self) -> list:
-        return [self.cdc] * self.sizes["rounds_per_cycle"] + [self.topic]
+    def _steps(self, tracer, timed: bool, end: float) -> None:
+        """Interleave the paths, each step to the one with less wall
+        time so far, until ``end`` has passed and each path has had at
+        least one step."""
+        busy = {self.cdc: 0.0, self.topic: 0.0}
+        steps = {self.cdc: 0, self.topic: 0}
+        while P() < end or min(steps.values()) == 0:
+            part = min(busy, key=busy.get)
+            t0 = P()
+            if timed:
+                self.tally.guarded(part.step, tracer)
+            else:
+                part.step(tracer, timed=False)
+            busy[part] += P() - t0
+            steps[part] += 1
 
     def setup(self) -> None:
-        """Both paths' set-up, then untimed blocks of the timed
-        schedule: the JIT and the heap keep warming for several blocks
-        after the first round and cycle."""
+        """Both paths' set-up, then one untimed operation of each: the
+        first round after the backfill and the second cycle still pay
+        one-off costs."""
         t0 = P()
         self.cdc.setup()
         t1 = P()
         self.topic.setup()
         t2 = P()
-        for part in self._schedule() * self.sizes["warm_blocks"]:
-            part.step(self.ctx.untraced, timed=False)
+        self._steps(self.ctx.untraced, False, end=0.0)
         self.setup_parts = {"cdc_setup_s": t1 - t0, "topic_setup_s": t2 - t1,
-                            "warm_blocks_s": P() - t2}
+                            "warm_steps_s": P() - t2}
 
     def run(self, seconds: float) -> None:
-        """Run the schedule until the deadline, and at least one whole
-        block so both paths are measured."""
-        end = P() + seconds
-        schedule = self._schedule()
-        for i, part in enumerate(itertools.cycle(schedule)):
-            if i >= len(schedule) and P() >= end:
-                break
-            self.tally.guarded(part.step, self.ctx.tracer)
+        self._steps(self.ctx.tracer, True, end=P() + seconds)
         self.tally.guarded(self.topic.final_check)
         self.op_s = self.cdc.op_s + self.topic.op_s
 
     def end_to_end(self) -> dict:
-        """Throughput of one schedule block (k rounds + one cycle) from
-        the median round and the median cycle, so it does not depend on
-        where the deadline cut the schedule."""
-        k = self.sizes["rounds_per_cycle"]
-        rows = k * self.sizes["cdc"]["round_rows"] + self.sizes["topic"]["chunk_rows"]
-        block_s = k * median(self.cdc.op_s) + median(self.topic.op_s)
         return {
             "latency_p50_s": median(self.cdc.op_s),
-            "rows_per_s": rows / block_s if self.cdc.op_s and self.topic.op_s else 0.0,
+            "rows_per_s": (self.sizes["topic"]["chunk_rows"] / median(self.topic.op_s)
+                           if self.topic.op_s else 0.0),
         }
 
     def report(self) -> dict:
@@ -445,9 +450,10 @@ QUERY_METRICS = ("build_s", "exec_s", "jobs", "tasks", "cpu_s", "gc_s",
 
 
 class BatchQueries(Part):
-    """Batch ETL is a job a fresh session runs, so a pass starts cold:
-    the per-query warm-up the session pays (code generation, Python
-    workers, index builds) is part of what a user waits for."""
+    """A pass runs the 11 queries in an order shuffled from the seed.
+    Set-up runs one untimed pass, so code generation, Python worker
+    start-up and the first index builds land in ``setup_s``; the timed
+    passes after it are warm."""
 
     name = "batch_queries"
 
@@ -457,13 +463,31 @@ class BatchQueries(Part):
         self.data_dir = os.path.join(self.ctx.tmp, "batch", "bench")
         self.rows = gen.write_tables(self.seed, self.sizes["sf"], self.data_dir)
         self.queries = registry.all_queries()
-        self.oracles = registry.all_oracles()
-        self.order = list(OLAP + CURATION)
-        random.Random(self.seed).shuffle(self.order)
-        self.pass_rows = sum(self.rows[t] for q in self.order for t in QUERY_TABLES[q])
-        self.query_s: dict[str, list[float]] = {q: [] for q in self.order}
+        t0 = P()
+        self.want = self._oracle_rows(registry.all_oracles())
+        self.check_s = P() - t0
+        self.rng = random.Random(self.seed)
+        self.pass_rows = sum(self.rows[t] for q in OLAP + CURATION for t in QUERY_TABLES[q])
+        self.query_s: dict[str, list[float]] = {q: [] for q in OLAP + CURATION}
         self.live_after = 0
-        self.checked = False
+        self.passes = 0
+        self._pass(self.ctx.untraced, timed=False)
+
+    def _oracle_rows(self, oracles: dict) -> dict:
+        """Each query's DuckDB oracle over the generated files,
+        normalized as the repository's correctness gate does."""
+        import duckdb
+
+        con = duckdb.connect()
+        try:
+            for t in self.rows:
+                con.execute(
+                    f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{os.path.join(self.data_dir, t + '.parquet')}'"
+                )
+            return {q: normalize(con.execute(oracles[q]).df()) for q in OLAP + CURATION}
+        finally:
+            con.close()
 
     def _query(self, name: str, tracer, trace_id: str):
         from cdc_kafka_project_spark import cache
@@ -478,60 +502,58 @@ class BatchQueries(Part):
         self.live_after = max(self.live_after, cache.live_count())
         return out, wall
 
-    def _pass(self, tracer) -> None:
-        """One pass; each query is one attempted operation. The pass
-        time counts only when every query ran and (on the first pass)
-        matched its oracle."""
-        trace_id = f"batch/{len(self.op_s)}"
-        outputs, walls = {}, {}
-        for name in self.order:
+    def _check(self, name: str, out) -> None:
+        got, want = normalize(out.to_pandas()), self.want[name]
+        if got != want:
+            raise AssertionError(
+                f"{name}: engine {len(got[1])} rows, columns {got[0]} != "
+                f"oracle {len(want[1])} rows, columns {want[0]}"
+            )
+
+    def _pass(self, tracer, timed: bool = True, end: float | None = None) -> None:
+        """One pass, stopped before a query when ``end`` has passed; each
+        query is one attempted operation, and its output is checked
+        against the oracle after it ran. A query's time counts only when
+        it matched."""
+        order = list(OLAP + CURATION)
+        self.rng.shuffle(order)
+        trace_id = f"batch/{self.passes}"
+        self.passes += 1
+        walls = {}
+        for name in order:
+            if end is not None and P() >= end:
+                break
             self.tally.attempted += 1
             try:
-                outputs[name], walls[name] = self._query(name, tracer, trace_id)
+                out, wall = self._query(name, tracer, trace_id)
+                self._check(name, out)
+                walls[name] = wall
             except Exception:
                 self.tally.fail(f"{name}: " + traceback.format_exc(limit=4))
-        if not self.checked:
-            self.checked = True
-            for name, out in outputs.items():
-                try:
-                    self._oracle_check(name, out)
-                except Exception:
-                    self.tally.fail(f"{name}: " + traceback.format_exc(limit=2))
-                    walls.pop(name)
-        if len(walls) < len(self.order):
+        if not timed:
             return
         for name, w in walls.items():
             self.query_s[name].append(w)
-        self.op_s.append(sum(walls.values()))
-
-    def _oracle_check(self, name: str, out) -> None:
-        import duckdb
-
-        con = duckdb.connect()
-        try:
-            for t in self.rows:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{os.path.join(self.data_dir, t + '.parquet')}'"
-                )
-            want = con.execute(self.oracles[name]).arrow()
-        finally:
-            con.close()
-        got_h, want_h = result_hash(out), result_hash(want)
-        if got_h != want_h:
-            raise AssertionError(
-                f"{name}: engine {out.num_rows} rows / {got_h[:12]} != "
-                f"oracle {want.num_rows} rows / {want_h[:12]}"
-            )
+        if len(walls) == len(order):
+            self.op_s.append(sum(walls.values()))
 
     def run(self, seconds: float) -> None:
+        """One whole pass, then passes until the deadline; the last one
+        stops at it, so the run does not overshoot by most of a pass."""
         end = P() + seconds
         self._pass(self.ctx.tracer)
         while P() < end:
-            self._pass(self.ctx.tracer)
+            self._pass(self.ctx.tracer, end=end)
+
+    def _median_pass(self, names) -> float:
+        """A pass over ``names`` from each query's median time, so the
+        queries of a pass the deadline cut count too."""
+        if not all(self.query_s[q] for q in names):
+            return 0.0
+        return sum(median(self.query_s[q]) for q in names)
 
     def end_to_end(self) -> dict:
-        p50 = median(self.op_s)
+        p50 = self._median_pass(OLAP + CURATION)
         return {
             "latency_p50_s": p50,
             "rows_per_s": self.pass_rows / p50 if p50 else 0.0,
@@ -540,10 +562,9 @@ class BatchQueries(Part):
     def report(self) -> dict:
         return {
             "pass_s": [round(x, 4) for x in self.op_s],
-            "olap_pass_s": median([sum(w) for w in zip(*(self.query_s[q] for q in OLAP))]),
-            "curation_pass_s": median(
-                [sum(w) for w in zip(*(self.query_s[q] for q in CURATION))]
-            ),
+            "query_runs": sum(len(v) for v in self.query_s.values()),
+            "olap_pass_s": self._median_pass(OLAP),
+            "curation_pass_s": self._median_pass(CURATION),
             "input_rows_per_pass": self.pass_rows,
         }
 
@@ -551,7 +572,7 @@ class BatchQueries(Part):
         rep = self.report()
         out = {"batch.olap_pass_s": rep["olap_pass_s"],
                "batch.curation_pass_s": rep["curation_pass_s"]}
-        for name in self.order:
+        for name in OLAP + CURATION:
             b = tr.find(f"query.{name}.build")
             e = tr.find(f"query.{name}.exec")
             both = b + e
@@ -572,33 +593,20 @@ class BatchQueries(Part):
         return out
 
 
-def result_hash(table) -> str:
-    """Order-insensitive hash of a result: columns sorted by name, each
-    value rendered canonically (floats by repr, nulls as NULL, dates and
-    timestamps as ISO text), rows sorted."""
-    import datetime as dt
-    import hashlib
-    import math
+def _load_normalize():
+    """``normalize`` of ``tools/check_correctness.py``: the result
+    canonicalisation the repository's oracle gate compares with."""
+    import importlib.util
 
-    cols = sorted(table.column_names)
-    data = [table.column(c).to_pylist() for c in cols]
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "tools", "check_correctness.py")
+    spec = importlib.util.spec_from_file_location("check_correctness", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.normalize
 
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        if isinstance(v, dt.datetime):
-            return v.isoformat(sep=" ")
-        if isinstance(v, (list, tuple)):
-            return "[" + ",".join(canon(x) for x in v) + "]"
-        return str(v)
 
-    rows = sorted(tuple(canon(v) for v in r) for r in zip(*data))
-    h = hashlib.sha256(repr(cols).encode())
-    for r in rows:
-        h.update(repr(r).encode())
-    return h.hexdigest()
+normalize = _load_normalize()
 
 
 WORKLOADS = {w.name: w for w in (Streaming, BatchQueries)}
