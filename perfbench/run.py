@@ -2,7 +2,7 @@
 """Benchmark of the CDC engine: one workload, one run, one JSON result.
 
     python3 perfbench/run.py --workload streaming --seed 1 \
-        --seconds 18 --trace 0
+        --seconds 22 --trace 0
 
 Run from the repository root. The run generates its inputs from
 ``--seed``, starts one ``local[nproc]`` session, sets the workload up,
@@ -120,13 +120,14 @@ def isolate(tmp: str) -> None:
     heap = os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
     # the heap starts at its full size: a heap still growing after the
     # warm-up makes the first timed operations pay for its collections.
-    # The JIT compiles after 5% of its default invocation counts: with
-    # the defaults, the compiled code arrives tens of seconds into the
-    # run, and its step (~25% on a CDC round) falls at a different
-    # operation from run to run
+    # The JIT stops at its first tier (C1): with the optimising tier,
+    # its compiler threads compete with the task threads for tens of
+    # seconds and a topic cycle still ran ~45% slower on its 1st than
+    # on its 10th repeat; with C1 alone the steady speed arrives within
+    # the warm-up (~10%), and set-up is ~25% shorter
     os.environ["SPARK_GRAFT_DRIVER_JAVA_OPTS"] = (
         os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")
-        + f" -Xms{heap} -XX:CompileThresholdScaling=0.05"
+        + f" -Xms{heap} -XX:TieredStopAtLevel=1"
         + f" -Djava.io.tmpdir={os.path.join(tmp, 'tmp')}"
         + f" -Dderby.system.home={os.path.join(tmp, 'tmp')}"
     ).strip()
