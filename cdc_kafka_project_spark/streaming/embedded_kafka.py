@@ -44,7 +44,7 @@ import os
 import shutil
 
 from cdc_kafka_project_spark import cache
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -183,19 +183,18 @@ class EmbeddedLog:
                 F.current_timestamp().alias("timestamp"),
             )
         )
-        # freeze the routing/offset assignment so the write below and
-        # the count after it see the same rows; released in `finally`
-        # — both consumers live inside this method
-        out = cache.scoped_localcheckpoint(out)
-        try:
-            out.write.mode("append").parquet(self._data_dir(topic))
-            counts = out.groupBy("partition").count().collect()
-        finally:
-            cache.release_checkpoint(out)
-        for r in counts:
-            meta["next_offsets"][r.partition] += int(r["count"])
+        # per-partition counts come from the write itself, so offsets
+        # and counts are one execution of the routing/offset plan
+        obs = Observation()
+        out.observe(
+            obs,
+            *[F.count_if(F.col("partition") == p).alias(str(p)) for p in range(n)],
+        ).write.mode("append").parquet(self._data_dir(topic))
+        counts = obs.get
+        for p in range(n):
+            meta["next_offsets"][p] += int(counts[str(p)])
         self._write_meta(topic, meta)
-        return int(sum(r["count"] for r in counts))
+        return int(sum(counts.values()))
 
     # -- consume ------------------------------------------------------------
     def raw_batch(self, spark: SparkSession, topic: str) -> DataFrame:

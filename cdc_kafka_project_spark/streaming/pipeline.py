@@ -37,6 +37,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from cdc_kafka_project_spark.operators import cdc
+from cdc_kafka_project_spark.streaming.stateful import running_totals_stateful
 
 
 class CdcFileStreamPipeline:
@@ -142,11 +143,10 @@ def streaming_running_totals(
     streaming groupBy in update mode: state is the per-group total,
     updated per micro-batch instead of per message — same result, and
     the state store bounds memory where the reference held a Postgres
-    row per department."""
+    row per department. The aggregation is ``running_totals_stateful``;
+    this wrapper adds the file source and the memory sink."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = stream.groupBy(group_col).agg(
-        F.sum(F.floor(F.col(amount_col)).cast("long")).alias("total_salary")
-    )
+    agg = running_totals_stateful(stream, group_col, amount_col)
     return (
         agg.writeStream.outputMode("update")
         .format("memory")

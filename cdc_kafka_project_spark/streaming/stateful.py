@@ -1,32 +1,27 @@
-"""Custom stateful streaming operators (applyInPandasWithState).
+"""Stateful streaming operators: per-group running totals.
 
-The built-in streaming ``groupBy().sum()`` already covers the
-reference's running totals (SURVEY §2 #26) — but a training-data
-pipeline needs operators whose state logic Spark has no built-in for
-(dedup-seen-sets, per-source quotas, cross-batch session carries).
-This module keeps one production-shaped example of the pattern:
-per-group running totals with explicitly managed state, the template a
-custom operator copies (state schema, timeout handling, update-mode
-emission).
+Production path: ``running_totals_stateful`` is Spark's built-in
+streaming aggregation (``groupBy().agg(sum)`` in update mode). The
+per-micro-batch state update runs in the JVM state store, state is
+versioned and checkpointed with the source offsets, and no Python
+worker sits on the path. It covers the reference's running totals
+(SURVEY §2 #26) and survives restarts via the checkpoint, the property
+the reference's in-memory ``last_processed_timestamp``
+(producer.py:15) lacked.
 
-Arrow-batched: each group's micro-batch rows arrive as pandas frames;
-state round-trips through the state store between micro-batches and
-survives restarts via the checkpoint — the property the reference's
-in-memory ``last_processed_timestamp`` (producer.py:15) lacked.
+A training-data pipeline also needs operators whose state logic Spark
+has no built-in for (dedup-seen-sets, per-source quotas, cross-batch
+session carries). ``running_totals_tws`` keeps the template such a
+custom operator copies: the same totals on
+``transformWithStateInPandas`` with explicitly managed, named state
+and update-mode emission.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING, Any
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
-
-if TYPE_CHECKING:  # pragma: no cover - typing only
-    import pandas as pd
 
 
 def stateful_shuffle_width(spark: SparkSession, n_groups: int) -> int:
@@ -77,38 +72,23 @@ def running_totals_stateful(
     group_col: str = "department",
     amount_col: str = "salary",
 ) -> DataFrame:
-    """Per-group running totals with explicit GroupState.
+    """Per-group running totals: ``<group_col> string, total_salary
+    long``, the sum of ``floor(amount)`` over every row seen so far.
 
     Semantics match the reference's per-message Postgres upsert
     accumulation (pdf p.6): state is one long per group, incremented by
-    each micro-batch's floored-amount sum, emitted after every batch
-    (update-mode analog). Unlike the reference, redelivery within a
-    checkpointed stream cannot double-count: state transitions commit
-    atomically with source offsets.
+    each micro-batch's floored-amount sum; run in update mode, each
+    batch emits the groups it touched. NULL amounts add nothing, and a
+    group whose amounts are all NULL emits 0. Unlike the reference,
+    redelivery within a checkpointed stream cannot double-count: state
+    transitions commit atomically with source offsets.
     """
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import math
-
-        import pandas as pd
-
-        (total,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            vals = pdf[amount_col].dropna()
-            total += int(sum(int(math.floor(v)) for v in vals))
-        state.update((total,))
-        yield pd.DataFrame({group_col: [key[0]], "total_salary": [total]})
-
-    return grouped_stream.groupBy(group_col).applyInPandasWithState(
-        fn,
-        outputStructType=f"{group_col} string, total_salary long",
-        stateStructType="total long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return grouped_stream.groupBy(
+        F.col(group_col).cast("string").alias(group_col)
+    ).agg(
+        F.coalesce(F.sum(F.floor(F.col(amount_col)).cast("long")), F.lit(0)).alias(
+            "total_salary"
+        )
     )
 
 
@@ -169,8 +149,9 @@ def running_totals_tws(
     amount_col: str = "salary",
 ) -> DataFrame:
     """The same running-totals operator on ``transformWithStateInPandas``
-    — Spark 4.x's current custom-stateful API (applyInPandasWithState's
-    successor). Differences that matter for an engine:
+    — Spark 4.x's custom-stateful API, kept as the template for state
+    logic the built-in aggregation cannot express. Differences that
+    matter for an engine:
 
     * state is a named, schema'd ``ValueState`` on a handle (multiple
       independent state variables per operator become possible —

@@ -79,6 +79,7 @@ def test_bpe_vocab_table_driver_and_distributed_paths_agree(spark):
     """r15: bpe_vocab_table segments driver-side below the bounded-
     collect gate; the two paths must emit identical (word, tokens,
     n_tokens) rows for a materialized words frame."""
+    from cdc_kafka_project_spark import cache
     from cdc_kafka_project_spark.operators.bpe import (
         bpe_vocab_table,
         train_bpe,
@@ -89,16 +90,21 @@ def test_bpe_vocab_table_driver_and_distributed_paths_agree(spark):
         [(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string"
     )
     merges = train_bpe(docs, 8)
-    wf = word_freq_table(docs).selectExpr(
-        "array_join(symbols, '') AS word", "freq"
-    ).localCheckpoint()
-    fast = bpe_vocab_table(docs, merges, words=wf)
-    slow = bpe_vocab_table(docs, merges, words=wf, driver_max_vocab=0)
-    to_set = lambda df: {  # noqa: E731
-        (r.word, tuple(r.tokens), r.n_tokens) for r in df.collect()
-    }
-    assert to_set(fast) == to_set(slow)
-    assert fast.count() == slow.count()
+    # freed explicitly: a bare localCheckpoint stays a persistent RDD
+    # until the JVM collects it, which skews later modules' counts
+    wf = cache.owned_localcheckpoint(
+        word_freq_table(docs).selectExpr("array_join(symbols, '') AS word", "freq")
+    )
+    try:
+        fast = bpe_vocab_table(docs, merges, words=wf)
+        slow = bpe_vocab_table(docs, merges, words=wf, driver_max_vocab=0)
+        to_set = lambda df: {  # noqa: E731
+            (r.word, tuple(r.tokens), r.n_tokens) for r in df.collect()
+        }
+        assert to_set(fast) == to_set(slow)
+        assert fast.count() == slow.count()
+    finally:
+        cache.free_owned_checkpoint(wf)
 
 
 def test_bpe_stops_early_when_no_pairs_left(spark):

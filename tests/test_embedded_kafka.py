@@ -56,12 +56,14 @@ def test_consumer_group_size_after_membership(spark, log):
 def test_publish_routes_by_key_with_contiguous_offsets(spark, log):
     """Same key -> same partition (per-key ordering domain); offsets
     are contiguous and continue across publishes (the producer's
-    append contract)."""
+    append contract), an empty publish included."""
     log.create_topic("t", num_partitions=3)
     df1 = spark.createDataFrame(
         [("a", "v1"), ("a", "v2"), ("b", "w1")], "key string, value string"
     )
     assert log.publish(df1, "t", order_col="value") == 3
+    empty = spark.createDataFrame([], "key string, value string")
+    assert log.publish(empty, "t", order_col="value") == 0
     df2 = spark.createDataFrame([("a", "v3")], "key string, value string")
     assert log.publish(df2, "t", order_col="value") == 1
 

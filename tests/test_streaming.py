@@ -80,7 +80,9 @@ def test_streaming_incremental_batches_resume_from_checkpoint(spark, tmpdirs):
 
 def test_streaming_running_totals_update_mode(spark, tmp_path):
     """Project-1 running aggregation (pdf p.4-6): per-department totals
-    over floored salaries, golden-totals-style."""
+    over floored salaries, golden-totals-style. NULL amounts add
+    nothing (an all-NULL group totals 0) and negative amounts floor
+    toward -inf."""
     src = tmp_path / "sal"
     src.mkdir()
     from decimal import Decimal
@@ -90,6 +92,11 @@ def test_streaming_running_totals_update_mode(spark, tmp_path):
         ("ECC", "d1", "t", d, Decimal("100.75")),
         ("CIT", "d1", "t", d, Decimal("200.25")),
         ("ECC", "d2", "t", d, Decimal("49.50")),
+        ("ECC", "d2", "t", d, None),
+        ("NUL", "d4", "t", d, None),
+        ("NUL", "d4", "t", d, None),
+        ("NEG", "d5", "t", d, Decimal("-10.25")),
+        ("NEG", "d5", "t", d, Decimal("3.50")),
     ]
     spark.createDataFrame(rows, EMPLOYEE_SALARIES_SCHEMA).coalesce(1).write.mode(
         "append"
@@ -102,11 +109,16 @@ def test_streaming_running_totals_update_mode(spark, tmp_path):
         query_name="rt_test",
     )
     q.awaitTermination()
+    assert spark.table("rt_test").dtypes == [
+        ("department", "string"),
+        ("total_salary", "bigint"),
+    ]
     got = {
         r.department: r.total_salary
         for r in spark.sql("SELECT * FROM rt_test").collect()
     }
-    assert got == {"ECC": 149, "CIT": 200}  # floor(100.75)+floor(49.50), floor(200.25)
+    # floor(100.75)+floor(49.50); floor(200.25); floor(-10.25)+floor(3.50)
+    assert got == {"ECC": 149, "CIT": 200, "NUL": 0, "NEG": -8}
 
 
 def test_streaming_windowed_counts_with_watermark(spark, tmp_path):
@@ -180,9 +192,10 @@ def test_decode_envelope_routes_corrupt_payloads_to_null(spark):
 
 
 def test_stateful_running_totals_survive_restart(spark, tmp_path):
-    """applyInPandasWithState: state round-trips through the checkpoint
-    across two bounded runs — the durable upgrade over the reference's
-    in-memory watermark (producer.py:15)."""
+    """Built-in streaming aggregation: state round-trips through the
+    checkpoint across two bounded runs — the durable upgrade over the
+    reference's in-memory watermark (producer.py:15). The operator runs
+    in the JVM state store: its plan holds no Python state function."""
     import decimal
 
     from cdc_kafka_project_spark.streaming.stateful import (
@@ -199,20 +212,27 @@ def test_stateful_running_totals_survive_restart(spark, tmp_path):
     first = [
         ("ECC", "d1", "t", d, decimal.Decimal("100.75")),
         ("CIT", "d1", "t", d, decimal.Decimal("200.25")),
+        ("NUL", "d4", "t", d, None),
+        ("NEG", "d5", "t", d, decimal.Decimal("-10.25")),
     ]
     spark.createDataFrame(first, EMPLOYEE_SALARIES_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(str(src))
-    run_stateful_totals(
-        spark, str(src), EMPLOYEE_SALARIES_SCHEMA, cp, out
-    ).awaitTermination()
+    q = run_stateful_totals(spark, str(src), EMPLOYEE_SALARIES_SCHEMA, cp, out)
+    q.awaitTermination()
+    plan = q._jsq.explainInternal(True)  # the executed consumer plan
+    assert "StateStoreSave" in plan
+    for python_node in ("PandasWithState", "PythonUDF", "EvalPython"):
+        assert python_node not in plan, plan
     got1 = {r.department: r.total_salary for r in latest_totals(spark, out).collect()}
-    assert got1 == {"ECC": 100, "CIT": 200}
+    assert got1 == {"ECC": 100, "CIT": 200, "NUL": 0, "NEG": -11}
 
     # second batch lands; a NEW bounded run must resume prior state
     second = [
         ("ECC", "d2", "t", d, decimal.Decimal("49.50")),
         ("EMS", "d3", "t", d, decimal.Decimal("10.99")),
+        ("NUL", "d4", "t", d, None),
+        ("NEG", "d5", "t", d, decimal.Decimal("3.50")),
     ]
     spark.createDataFrame(second, EMPLOYEE_SALARIES_SCHEMA).coalesce(1).write.mode(
         "append"
@@ -223,7 +243,7 @@ def test_stateful_running_totals_survive_restart(spark, tmp_path):
     got2 = {r.department: r.total_salary for r in latest_totals(spark, out).collect()}
     # accumulated across runs: ECC = 100 + 49; CIT untouched in run 2
     # but still current from run 1's emission
-    assert got2 == {"ECC": 149, "CIT": 200, "EMS": 10}
+    assert got2 == {"ECC": 149, "CIT": 200, "EMS": 10, "NUL": 0, "NEG": -8}
 
 
 def test_sized_state_session_caps_state_partitions(spark, tmp_path):
@@ -300,8 +320,8 @@ def test_tws_plan_builds_without_execution(spark, tmp_path):
 
 def test_tws_running_totals_parity_and_restart(spark, tmp_path):
     """transformWithStateInPandas (the current Spark 4.x stateful API,
-    RocksDB-backed) must produce the same totals as the
-    applyInPandasWithState implementation and resume state across
+    RocksDB-backed) must produce the same totals as the built-in
+    aggregation in running_totals_stateful and resume state across
     bounded runs. Skips when google.protobuf is absent (TWS's state
     protocol dependency; not shipped in this container)."""
     pytest.importorskip(
