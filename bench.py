@@ -326,8 +326,6 @@ def _streaming_metrics(spark, sf_dir: str) -> dict:
     import shutil
     import tempfile
 
-    from pyspark.sql import Window
-
     from cdc_kafka_project_spark.catalog import load_table
     from cdc_kafka_project_spark.schemas import TESTDATA_SCHEMAS
     from cdc_kafka_project_spark.streaming.embedded_kafka import EmbeddedLog
@@ -339,7 +337,9 @@ def _streaming_metrics(spark, sf_dir: str) -> dict:
         encode_envelope,
     )
     from cdc_kafka_project_spark.streaming.stateful import (
-        running_totals_stateful,
+        latest_totals,
+        run_stateful_totals,
+        sized_state_session,
     )
     from pyspark.sql import functions as F
 
@@ -394,10 +394,6 @@ def _streaming_metrics(spark, sf_dir: str) -> dict:
         # count is read from the published events OUTSIDE the timed
         # replays; the consumer DAG, batching, sink, assertions and
         # timer placement are unchanged.
-        from cdc_kafka_project_spark.streaming.stateful import (
-            sized_state_session,
-        )
-
         n_groups = int(events.select("event_type").distinct().count())
         sess = sized_state_session(spark, n_groups)
 
@@ -411,41 +407,17 @@ def _streaming_metrics(spark, sf_dir: str) -> dict:
                 F.col("payload.event_type").alias("event_type"),
                 F.col("payload.value").alias("value"),
             )
-            totals = running_totals_stateful(
-                typed, group_col="event_type", amount_col="value"
-            )
-
-            def write_batch(batch_df, epoch_id: int) -> None:
-                batch_df.withColumn(
-                    "__epoch", F.lit(int(epoch_id))
-                ).write.mode("append").parquet(out_dir)
-
             t0 = time.time()
-            (
-                totals.writeStream.outputMode("update")
-                .queryName(f"bench_stream_tp_{r}")
-                .foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
+            run_stateful_totals(
+                typed, ckpt, out_dir, group_col="event_type", amount_col="value"
+            ).awaitTermination()
             tp_runs.append(time.time() - t0)
             if r == 0:
                 # correctness guard: the throughput number is only
                 # meaningful if the stream converged to the batch twin
-                w = F.row_number().over(
-                    Window.partitionBy("event_type").orderBy(
-                        F.col("__epoch").desc()
-                    )
-                )
                 got = {
                     (x.event_type, x.total_salary)
-                    for x in spark.read.parquet(out_dir)
-                    .withColumn("__rn", w)
-                    .filter(F.col("__rn") == 1)
-                    .select("event_type", "total_salary")
-                    .collect()
+                    for x in latest_totals(spark, out_dir, "event_type").collect()
                 }
                 want = {
                     (x.event_type, x.total_salary)

@@ -221,7 +221,8 @@ def merge_upsert(
     through. The anti-join broadcasts when the micro-batch of changes is
     small — the common case — so incremental maintenance costs one
     broadcast hash join, not a full shuffle of the replica.
-    Used by streaming foreachBatch (streaming/pipeline.py).
+    Callers: the registered ``cdc_merge_upsert`` query
+    (queries/cdc_surface.py) and tests.
     """
     new_state = apply_changes(changes, key_cols, order_cols, action_col)
     changed_keys = changes.select(*key_cols).distinct()

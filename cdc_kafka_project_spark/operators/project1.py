@@ -2,10 +2,10 @@
 
 The reference's sibling project: CSV employee-salary records ->
 filter/transform -> Kafka -> per-department running salary totals.
-Batch and streaming share these transforms (streaming/pipeline.py's
-``streaming_running_totals`` applies the same aggregation in update
-mode); the golden-totals workload (EMS 3,779,570 / CIT 9,102,142 /
-ECC 2,042,698, pdf p.7) is reproduced shape-for-shape in tests.
+Batch and streaming share these transforms (streaming/stateful.py's
+``run_stateful_totals`` applies the same aggregation in update mode);
+the golden-totals workload (EMS 3,779,570 / CIT 9,102,142 / ECC
+2,042,698, pdf p.7) is reproduced shape-for-shape in tests.
 """
 
 from __future__ import annotations

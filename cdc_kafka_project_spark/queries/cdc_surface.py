@@ -18,6 +18,7 @@ from cdc_kafka_project_spark.catalog import load_table
 from cdc_kafka_project_spark.functions import REVENUE_DEC_SQL, revenue_dec
 from cdc_kafka_project_spark.operators import cdc
 from cdc_kafka_project_spark.registry import query
+from cdc_kafka_project_spark.streaming import kafka_io
 
 #: event-time rendering shared by Spark (date_format) and DuckDB (strftime)
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -529,8 +530,9 @@ def cdc_debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_ms, source}`` with op in {c,u,d}, before=null on create,
     after=null on delete. This query synthesizes the envelope from the
     change-log (lag() supplies the before-image, first-event rank
-    supplies 'c'), serializes with to_json, parses it back with a typed
-    from_json schema, and applies latest-per-key to the DECODED rows.
+    supplies 'c'), encodes it with ``kafka_io.encode_debezium``, decodes
+    it back with ``kafka_io.decode_debezium`` (the streaming codec), and
+    applies latest-per-key to the DECODED rows.
 
     The oracle recomputes the replica straight from the change-log —
     hash equality therefore proves the envelope codec is lossless
@@ -561,37 +563,26 @@ def cdc_debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("prev_value").alias("value"),
         ),
     )
-    after = F.when(
-        op != "d",
-        F.struct("user_id", "event_type", "value"),
+    after = F.when(op != "d", F.struct("user_id", "event_type", "value"))
+    changes = tagged.select(
+        "user_id",
+        "event_id",
+        before.alias("before"),
+        after.alias("after"),
+        op.alias("op"),
+        F.unix_millis("ts").alias("ts_ms"),
     )
-    envelope = F.to_json(
-        F.struct(
-            before.alias("before"),
-            after.alias("after"),
-            op.alias("op"),
-            F.unix_millis("ts").alias("ts_ms"),
-            F.struct(
-                F.lit("events").alias("table"), F.col("event_id").alias("seq")
-            ).alias("source"),
-        )
+    wire = kafka_io.encode_debezium(
+        changes, "user_id", table="events", seq_col="event_id"
     )
-    img = "struct<user_id:bigint,event_type:string,value:double>"
-    schema = (
-        f"struct<before:{img},after:{img},op:string,ts_ms:bigint,"
-        "source:struct<table:string,seq:bigint>>"
-    )
-    decoded = tagged.select(
-        F.from_json(envelope, schema).alias("e")
-    ).select(
-        F.coalesce(F.col("e.after.user_id"), F.col("e.before.user_id")).alias(
-            "user_id"
-        ),
-        F.col("e.op").alias("op"),
-        F.col("e.after.event_type").alias("event_type"),
-        F.col("e.after.value").alias("value"),
-        F.col("e.ts_ms").alias("ts_ms"),
-        F.col("e.source.seq").alias("seq"),
+    row_schema = ev.select("user_id", "event_type", "value").schema
+    decoded = kafka_io.decode_debezium(wire, row_schema).select(
+        F.col("row.user_id").alias("user_id"),
+        "op",
+        F.col("after.event_type").alias("event_type"),
+        F.col("after.value").alias("value"),
+        "ts_ms",
+        "seq",
     )
     replica = cdc.latest_per_key(decoded, ["user_id"], ["ts_ms", "seq"])
     return replica.filter(F.col("op") != "d").select(

@@ -118,6 +118,42 @@ def wire_invalid_predicate():
     )
 
 
+def run_consumer(spark: SparkSession, log: EmbeddedLog, work_dir: str) -> None:
+    """Step 4 (module docstring): one bounded run of the CDC consumer
+    over ``CDC_TOPIC``. Each micro-batch is split by
+    ``cdc.validate_split``: corrupt payloads (NULL after decode) and
+    rows failing ``wire_invalid_predicate`` go to ``DLQ_TOPIC`` with
+    their original bytes (consumer.py:50-58); valid rows append to the
+    curated log under ``work_dir``. The offsets checkpoint lives under
+    ``work_dir`` too, so a rerun consumes only new messages. The DLQ
+    publish and the curated append are two separate writes: a retried
+    micro-batch publishes its DLQ rows again (at-least-once)."""
+    decoded = kafka_io.read_cdc_stream(
+        spark,
+        bootstrap_servers="embedded",
+        topic=CDC_TOPIC,
+        value_schema=KAFKA_ENVELOPE_SCHEMA,
+        transport=log,
+    )
+    invalid = F.col("payload").isNull() | wire_invalid_predicate()
+    curated_dir = os.path.join(work_dir, "curated")
+
+    def _consume(batch: DataFrame, epoch_id: int) -> None:
+        valid, dlq = cdc.validate_split(batch, invalid)
+        log.publish(dlq.select("key", F.col("raw_value").alias("value")), DLQ_TOPIC)
+        from_wire(valid).write.mode("append").parquet(curated_dir)
+
+    (
+        decoded.writeStream.foreachBatch(_consume)
+        .option(
+            "checkpointLocation", os.path.join(work_dir, "cp_consumer")
+        )
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_full_pipeline(
     spark: SparkSession,
     work_dir: str,
@@ -158,37 +194,7 @@ def run_full_pipeline(
     producer.trigger(availableNow=True).start().awaitTermination()
 
     # 4. consumer: topic -> decode -> split -> DLQ topic + curated log
-    decoded = kafka_io.read_cdc_stream(
-        spark,
-        bootstrap_servers="embedded",
-        topic=CDC_TOPIC,
-        value_schema=KAFKA_ENVELOPE_SCHEMA,
-        transport=log,
-    )
-    invalid = F.coalesce(wire_invalid_predicate(), F.lit(True))
-    bad = F.col("payload").isNull() | invalid
-
-    def _consume(batch: DataFrame, epoch_id: int) -> None:
-        # original payload to the DLQ topic (consumer.py:50-58)
-        log.publish(
-            batch.filter(bad).select(
-                "key", F.col("raw_value").alias("value")
-            ),
-            DLQ_TOPIC,
-        )
-        from_wire(batch.filter(~bad)).write.mode("append").parquet(
-            curated_dir
-        )
-
-    (
-        decoded.writeStream.foreachBatch(_consume)
-        .option(
-            "checkpointLocation", os.path.join(work_dir, "cp_consumer")
-        )
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_consumer(spark, log, work_dir)
 
     # 5. verify (project2_dag.py:152-156, assertable)
     replica = cdc.apply_changes(

@@ -1,10 +1,11 @@
 """Kafka source/sink wrappers (SURVEY.md §2 #8, #10, #27).
 
-This container has no Kafka broker or spark-sql-kafka jar, so these
-builders are exercised only up to plan construction in tests; the
-transform layer they wrap (envelope encode/decode) is fully tested on
-static DataFrames — Structured Streaming's unified model guarantees
-the same plan runs on the Kafka source unchanged.
+This container has no Kafka broker or spark-sql-kafka jar, so the
+broker-backed branches are exercised only up to plan construction in
+tests. With an ``embedded_kafka.EmbeddedLog`` as ``transport``,
+``read_cdc_stream`` and ``write_keyed_stream`` run end to end
+(tests/test_embedded_kafka.py); the envelope encode/decode they wrap is
+the same on both branches.
 
 Wire format per the reference (producer.py:51-71): JSON value, string
 key = primary key. Partition-by-key gives per-key ordering — the only
@@ -27,21 +28,34 @@ def decode_envelope(raw: DataFrame, value_schema: StructType) -> DataFrame:
     reference's broad except at consumer.py:95-102 silently drops
     them — deliberate divergence, documented in SURVEY §7).
 
-    PERMISSIVE from_json returns an all-NULL *struct* (not NULL) for
-    unparseable input, indistinguishable from valid JSON with absent
-    keys — so corruption is detected via columnNameOfCorruptRecord and
-    folded into payload nullability here, keeping the caller contract
-    a single null check.
-
     ``raw_value`` (the original payload string, for DLQ re-publish —
     consumer.py:50-58 forwards the *original* bytes) and source
     metadata columns (partition, offset), when present on the raw
     frame, pass through — offset is the per-key tiebreaker the apply
     step uses for equal timestamps (the reference breaks ties by log
     position; SURVEY §7 risk a)."""
-    corrupt = StructType(
-        value_schema.fields + [StructField("_corrupt", StringType())]
+    return _decode_json(
+        raw,
+        value_schema,
+        payload=F.struct(
+            *[F.col(f"__p.{f.name}").alias(f.name) for f in value_schema.fields]
+        ),
     )
+
+
+def _decode_json(raw: DataFrame, schema: StructType, **outputs) -> DataFrame:
+    """The one PERMISSIVE JSON decode behind every wire format: parse
+    ``value`` with ``schema`` into ``__p``, then emit each of
+    ``outputs`` (Columns over ``__p``) only when the value parsed.
+    ``key``, ``raw_value`` and any source metadata (partition, offset)
+    pass through.
+
+    PERMISSIVE from_json returns an all-NULL *struct* (not NULL) for
+    unparseable input, indistinguishable from valid JSON with absent
+    keys — so corruption is detected via columnNameOfCorruptRecord and
+    folded into output nullability here: corrupt or NULL input yields
+    NULL outputs, keeping the caller contract a single null check."""
+    corrupt = StructType(schema.fields + [StructField("_corrupt", StringType())])
     meta = [c for c in ("partition", "offset") if c in raw.columns]
     parsed = raw.select(
         F.col("key").cast("string").alias("key"),
@@ -53,11 +67,13 @@ def decode_envelope(raw: DataFrame, value_schema: StructType) -> DataFrame:
         F.col("value").cast("string").alias("raw_value"),
         *meta,
     )
-    payload = F.when(
-        F.col("__p").isNotNull() & F.col("__p._corrupt").isNull(),
-        F.struct(*[F.col(f"__p.{f.name}").alias(f.name) for f in value_schema.fields]),
-    ).alias("payload")
-    return parsed.select("key", payload, "raw_value", *meta)
+    ok = F.col("__p").isNotNull() & F.col("__p._corrupt").isNull()
+    return parsed.select(
+        "key",
+        *[F.when(ok, c).alias(name) for name, c in outputs.items()],
+        "raw_value",
+        *meta,
+    )
 
 
 def encode_envelope(df: DataFrame, key_col: str, passthrough=()) -> DataFrame:
@@ -226,32 +242,15 @@ def decode_debezium(raw: DataFrame, row_schema: StructType) -> DataFrame:
     struct regardless of op. Source metadata (partition, offset) and
     ``raw_value`` pass through for tiebreaks and DLQ re-publish.
     """
-    env = debezium_envelope_schema(row_schema)
-    corrupt = StructType(
-        env.fields + [StructField("_corrupt", StringType())]
-    )
-    meta = [c for c in ("partition", "offset") if c in raw.columns]
-    parsed = raw.select(
-        F.col("key").cast("string").alias("key"),
-        F.from_json(
-            F.col("value").cast("string"),
-            corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        ).alias("__p"),
-        F.col("value").cast("string").alias("raw_value"),
-        *meta,
-    )
-    ok = F.col("__p").isNotNull() & F.col("__p._corrupt").isNull()
-    return parsed.select(
-        "key",
-        F.when(ok, F.lower("__p.op")).alias("op"),
-        F.when(ok, F.col("__p.before")).alias("before"),
-        F.when(ok, F.col("__p.after")).alias("after"),
-        F.when(ok, F.coalesce("__p.after", "__p.before")).alias("row"),
-        F.when(ok, F.col("__p.ts_ms")).alias("ts_ms"),
-        F.when(ok, F.col("__p.source.seq")).alias("seq"),
-        "raw_value",
-        *meta,
+    return _decode_json(
+        raw,
+        debezium_envelope_schema(row_schema),
+        op=F.lower("__p.op"),
+        before=F.col("__p.before"),
+        after=F.col("__p.after"),
+        row=F.coalesce("__p.after", "__p.before"),
+        ts_ms=F.col("__p.ts_ms"),
+        seq=F.col("__p.source.seq"),
     )
 
 

@@ -29,7 +29,7 @@ micro-batch; you append deltas and resolve last-writer-wins at read
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,7 +37,6 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from cdc_kafka_project_spark.operators import cdc
-from cdc_kafka_project_spark.streaming.stateful import running_totals_stateful
 
 
 class CdcFileStreamPipeline:
@@ -76,9 +75,11 @@ class CdcFileStreamPipeline:
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         valid, dlq = cdc.validate_split(batch_df, self.invalid)
         # Two sinks off one micro-batch (consumer.py:50-58's DLQ route).
-        # foreachBatch may re-run a batch on failure; parquet append is
-        # then at-least-once — dedup on (key, order) at read makes the
-        # replica view idempotent anyway.
+        # foreachBatch may re-run a batch on failure, and both parquet
+        # appends are then at-least-once. For the curated log that is
+        # harmless: dedup on (key, order) at read keeps the replica view
+        # idempotent. The DLQ has no such dedup, so a retried batch
+        # leaves its DLQ rows in it twice.
         dlq.write.mode("append").parquet(self.dlq_dir)
         valid.write.mode("append").parquet(self.curated_dir)
 
@@ -128,33 +129,6 @@ class CdcFileStreamPipeline:
         return cdc.scd2_history(
             self.curated_log(), self.key_cols, self.order_cols, ts_col
         )
-
-
-def streaming_running_totals(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
-    checkpoint_dir: str,
-    group_col: str = "department",
-    amount_col: str = "salary",
-    query_name: str = "running_totals",
-) -> StreamingQuery:
-    """Project-1's per-message running aggregation (pdf p.4-6) as a
-    streaming groupBy in update mode: state is the per-group total,
-    updated per micro-batch instead of per message — same result, and
-    the state store bounds memory where the reference held a Postgres
-    row per department. The aggregation is ``running_totals_stateful``;
-    this wrapper adds the file source and the memory sink."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = running_totals_stateful(stream, group_col, amount_col)
-    return (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def streaming_windowed_counts(

@@ -8,20 +8,12 @@ worker sits on the path. It covers the reference's running totals
 (SURVEY §2 #26) and survives restarts via the checkpoint, the property
 the reference's in-memory ``last_processed_timestamp``
 (producer.py:15) lacked.
-
-A training-data pipeline also needs operators whose state logic Spark
-has no built-in for (dedup-seen-sets, per-source quotas, cross-batch
-session carries). ``running_totals_tws`` keeps the template such a
-custom operator copies: the same totals on
-``transformWithStateInPandas`` with explicitly managed, named state
-and update-mode emission.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
 
 def stateful_shuffle_width(spark: SparkSession, n_groups: int) -> int:
@@ -33,16 +25,9 @@ def stateful_shuffle_width(spark: SparkSession, n_groups: int) -> int:
     commit, maintenance) on every trigger: measured 3.5x consumer
     throughput moving the 5-group running-totals stream from 32 to
     key-domain-sized state partitions. Capped BY the session width so
-    a high-cardinality domain still follows the cluster sizing;
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` overrides for deployments
-    that know better. NOTE: state partitioning is fixed at the FIRST
-    run of a checkpoint — pick the width before the stream's first
-    start, not after."""
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    a high-cardinality domain still follows the cluster sizing. NOTE:
+    state partitioning is fixed at the FIRST run of a checkpoint — pick
+    the width before the stream's first start, not after."""
     try:
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
@@ -93,32 +78,32 @@ def running_totals_stateful(
 
 
 def run_stateful_totals(
-    spark: SparkSession,
-    source_dir: str,
-    schema: StructType,
+    stream: DataFrame,
     checkpoint_dir: str,
     out_dir: str,
     group_col: str = "department",
     amount_col: str = "salary",
 ) -> StreamingQuery:
-    """Bounded (availableNow) run of the stateful totals over a file
-    source; restartable — rerunning with the same checkpoint resumes
-    the state store and processes only new files.
+    """The running-totals consumer: a bounded (availableNow) run of
+    ``running_totals_stateful`` over ``stream`` (a typed streaming
+    frame with ``group_col`` and ``amount_col``); restartable —
+    rerunning with the same checkpoint resumes the state store and
+    processes only new input.
 
-    Emissions append to ``out_dir`` stamped with the batch epoch (the
-    memory sink cannot recover from a checkpoint, so restartable runs
-    need a real sink); ``latest_totals`` reads the current value per
-    group."""
+    Each epoch's update-mode emissions (the groups that epoch touched)
+    append to ``out_dir`` stamped with the epoch id in ``__epoch``
+    (the memory sink cannot recover from a checkpoint, so restartable
+    runs need a real sink); ``latest_totals`` reads the current value
+    per group. Returns the started query; callers await it."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.withColumn("__epoch", F.lit(epoch_id)).write.mode(
             "append"
         ).parquet(out_dir)
 
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    out = running_totals_stateful(stream, group_col, amount_col)
     return (
-        out.writeStream.outputMode("update")
+        running_totals_stateful(stream, group_col, amount_col)
+        .writeStream.outputMode("update")
         .foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -140,65 +125,4 @@ def latest_totals(
         log.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(group_col, "total_salary")
-    )
-
-
-def running_totals_tws(
-    grouped_stream: DataFrame,
-    group_col: str = "department",
-    amount_col: str = "salary",
-) -> DataFrame:
-    """The same running-totals operator on ``transformWithStateInPandas``
-    — Spark 4.x's custom-stateful API, kept as the template for state
-    logic the built-in aggregation cannot express. Differences that
-    matter for an engine:
-
-    * state is a named, schema'd ``ValueState`` on a handle (multiple
-      independent state variables per operator become possible —
-      seen-sets + quotas + timers in one processor);
-    * requires the RocksDB state-store provider, which is also the
-      scale answer: state lives off-heap/on-disk with changelog
-      checkpointing, so per-key state is bounded by disk, not executor
-      heap.
-
-    Semantics are identical to ``running_totals_stateful``; the parity
-    test pins both implementations against the same workload.
-
-    ENVIRONMENT GATE: TWS's state protocol needs ``google.protobuf``
-    (PySpark's transform_with_state_driver_worker imports it), which
-    this container does not ship — the operator builds everywhere, but
-    executing the stream without protobuf fails at worker init, so the
-    parity test skips (tests/test_streaming.py). On any standard
-    PySpark 4.x install (protobuf is a released pyspark dependency)
-    it runs as-is.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotal(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._total = handle.getValueState("total", "total long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import math
-
-            import pandas as pd
-
-            total = self._total.get()[0] if self._total.exists() else 0
-            for pdf in rows:
-                vals = pdf[amount_col].dropna()
-                total += int(sum(int(math.floor(v)) for v in vals))
-            self._total.update((total,))
-            yield pd.DataFrame({group_col: [key[0]], "total_salary": [total]})
-
-        def close(self) -> None:
-            pass
-
-    return grouped_stream.groupBy(group_col).transformWithStateInPandas(
-        statefulProcessor=RunningTotal(),
-        outputStructType=f"{group_col} string, total_salary long",
-        outputMode="Update",
-        timeMode="None",
     )

@@ -6,7 +6,6 @@ the real envelope path), and the topic-admin surface is exercised.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from cdc_kafka_project_spark.schemas import KAFKA_ENVELOPE_SCHEMA
 from cdc_kafka_project_spark.streaming import kafka_io
@@ -15,6 +14,7 @@ from cdc_kafka_project_spark.streaming.full_pipeline import (
     CDC_TOPIC,
     DLQ_TOPIC,
     golden_workload,
+    run_consumer,
     run_full_pipeline,
 )
 
@@ -175,45 +175,28 @@ def test_full_pipeline_golden_workload(spark, tmp_path):
 def test_full_pipeline_corrupt_payload_routes_to_dlq(spark, tmp_path, log):
     """A poison message (malformed JSON) must land on the DLQ with its
     original bytes — never crash, never vanish (SURVEY §2 #28's
-    deliberate divergence from the reference's silent swallow)."""
-    from cdc_kafka_project_spark.streaming.full_pipeline import (
-        wire_invalid_predicate,
-    )
-
-    log.create_topic("cdc", num_partitions=1)
-    log.create_topic("dlq", num_partitions=1)
+    deliberate divergence from the reference's silent swallow) — while
+    the valid message beside it reaches the curated log. Drives the
+    pipeline's own consumer."""
+    log.create_topic(CDC_TOPIC, num_partitions=1)
+    log.create_topic(DLQ_TOPIC, num_partitions=1)
     ok = '{"emp_id": 9, "emp_FN": "Ok", "emp_dob": "2010-01-01", "emp_salary": 5000, "action": "insert", "last_updated_at": "2024-01-01 00:00:00"}'
     log.publish(
         spark.createDataFrame(
             [("9", ok), ("13", "{not json")], "key string, value string"
         ),
-        "cdc",
+        CDC_TOPIC,
         order_col="key",
     )
-    decoded = kafka_io.read_cdc_stream(
-        spark, "embedded", "cdc", KAFKA_ENVELOPE_SCHEMA, transport=log
-    )
-    bad = F.col("payload").isNull() | F.coalesce(
-        wire_invalid_predicate(), F.lit(True)
-    )
-
-    def _consume(batch, _):
-        log.publish(
-            batch.filter(bad).select("key", F.col("raw_value").alias("value")),
-            "dlq",
-        )
-
-    (
-        decoded.writeStream.foreachBatch(_consume)
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    dlq = log.raw_batch(spark, "dlq").collect()
+    run_consumer(spark, log, str(tmp_path))
+    dlq = log.raw_batch(spark, DLQ_TOPIC).collect()
     assert len(dlq) == 1
     assert bytes(dlq[0].key).decode() == "13"
     assert bytes(dlq[0].value).decode() == "{not json"  # original payload
+    curated = spark.read.parquet(str(tmp_path / "curated")).collect()
+    assert [(r.emp_id, r.first_name, r.salary) for r in curated] == [
+        (9, "Ok", 5000)
+    ]
 
 
 def test_commit_pinned_to_delivered_batch_despite_interleaved_publish(

@@ -13,8 +13,13 @@ from cdc_kafka_project_spark.schemas import EMP_CDC_SCHEMA, EMPLOYEE_SALARIES_SC
 from cdc_kafka_project_spark.streaming import kafka_io
 from cdc_kafka_project_spark.streaming.pipeline import (
     CdcFileStreamPipeline,
-    streaming_running_totals,
     streaming_windowed_counts,
+)
+from cdc_kafka_project_spark.streaming.stateful import (
+    latest_totals,
+    run_stateful_totals,
+    sized_state_session,
+    stateful_shuffle_width,
 )
 from tests.test_cdc_golden import golden_rows
 
@@ -78,47 +83,62 @@ def test_streaming_incremental_batches_resume_from_checkpoint(spark, tmpdirs):
     assert p2.curated_log().count() == 4
 
 
-def test_streaming_running_totals_update_mode(spark, tmp_path):
+def _salaries_stream(spark, src, **options):
+    reader = spark.readStream.schema(EMPLOYEE_SALARIES_SCHEMA).options(**options)
+    return reader.parquet(src)
+
+
+def test_stateful_running_totals_update_mode(spark, tmp_path):
     """Project-1 running aggregation (pdf p.4-6): per-department totals
     over floored salaries, golden-totals-style. NULL amounts add
     nothing (an all-NULL group totals 0) and negative amounts floor
-    toward -inf."""
+    toward -inf. Update mode: each epoch emits only the groups its
+    input touched."""
     src = tmp_path / "sal"
     src.mkdir()
     from decimal import Decimal
 
     d = dt.date(2015, 1, 1)
-    rows = [
-        ("ECC", "d1", "t", d, Decimal("100.75")),
-        ("CIT", "d1", "t", d, Decimal("200.25")),
-        ("ECC", "d2", "t", d, Decimal("49.50")),
-        ("ECC", "d2", "t", d, None),
-        ("NUL", "d4", "t", d, None),
-        ("NUL", "d4", "t", d, None),
-        ("NEG", "d5", "t", d, Decimal("-10.25")),
-        ("NEG", "d5", "t", d, Decimal("3.50")),
+    files = [
+        [
+            ("ECC", "d1", "t", d, Decimal("100.75")),
+            ("CIT", "d1", "t", d, Decimal("200.25")),
+            ("NEG", "d5", "t", d, Decimal("-10.25")),
+        ],
+        [
+            ("ECC", "d2", "t", d, Decimal("49.50")),
+            ("ECC", "d2", "t", d, None),
+            ("NUL", "d4", "t", d, None),
+            ("NUL", "d4", "t", d, None),
+        ],
+        [("NEG", "d5", "t", d, Decimal("3.50"))],
     ]
-    spark.createDataFrame(rows, EMPLOYEE_SALARIES_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    q = streaming_running_totals(
-        spark,
-        str(src),
-        EMPLOYEE_SALARIES_SCHEMA,
+    for rows in files:
+        spark.createDataFrame(rows, EMPLOYEE_SALARIES_SCHEMA).coalesce(
+            1
+        ).write.mode("append").parquet(str(src))
+    out = str(tmp_path / "totals")
+    run_stateful_totals(
+        _salaries_stream(spark, str(src), maxFilesPerTrigger=1),
         str(tmp_path / "cp"),
-        query_name="rt_test",
-    )
-    q.awaitTermination()
-    assert spark.table("rt_test").dtypes == [
-        ("department", "string"),
-        ("total_salary", "bigint"),
-    ]
-    got = {
-        r.department: r.total_salary
-        for r in spark.sql("SELECT * FROM rt_test").collect()
-    }
+        out,
+    ).awaitTermination()
+    totals = latest_totals(spark, out)
+    assert totals.dtypes == [("department", "string"), ("total_salary", "bigint")]
+    got = {r.department: r.total_salary for r in totals.collect()}
     # floor(100.75)+floor(49.50); floor(200.25); floor(-10.25)+floor(3.50)
     assert got == {"ECC": 149, "CIT": 200, "NUL": 0, "NEG": -8}
+
+    # one epoch per file; each emits the running totals of the groups
+    # that file touched, and no others
+    per_epoch: dict[int, dict] = {}
+    for r in spark.read.parquet(out).collect():
+        per_epoch.setdefault(r["__epoch"], {})[r.department] = r.total_salary
+    assert [per_epoch[e] for e in sorted(per_epoch)] == [
+        {"ECC": 100, "CIT": 200, "NEG": -11},
+        {"ECC": 149, "NUL": 0},
+        {"NEG": -8},
+    ]
 
 
 def test_streaming_windowed_counts_with_watermark(spark, tmp_path):
@@ -198,11 +218,6 @@ def test_stateful_running_totals_survive_restart(spark, tmp_path):
     in the JVM state store: its plan holds no Python state function."""
     import decimal
 
-    from cdc_kafka_project_spark.streaming.stateful import (
-        latest_totals,
-        run_stateful_totals,
-    )
-
     src = tmp_path / "sal2"
     src.mkdir()
     d = dt.date(2015, 1, 1)
@@ -218,7 +233,7 @@ def test_stateful_running_totals_survive_restart(spark, tmp_path):
     spark.createDataFrame(first, EMPLOYEE_SALARIES_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(str(src))
-    q = run_stateful_totals(spark, str(src), EMPLOYEE_SALARIES_SCHEMA, cp, out)
+    q = run_stateful_totals(_salaries_stream(spark, str(src)), cp, out)
     q.awaitTermination()
     plan = q._jsq.explainInternal(True)  # the executed consumer plan
     assert "StateStoreSave" in plan
@@ -237,9 +252,7 @@ def test_stateful_running_totals_survive_restart(spark, tmp_path):
     spark.createDataFrame(second, EMPLOYEE_SALARIES_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(str(src))
-    run_stateful_totals(
-        spark, str(src), EMPLOYEE_SALARIES_SCHEMA, cp, out
-    ).awaitTermination()
+    run_stateful_totals(_salaries_stream(spark, str(src)), cp, out).awaitTermination()
     got2 = {r.department: r.total_salary for r in latest_totals(spark, out).collect()}
     # accumulated across runs: ECC = 100 + 49; CIT untouched in run 2
     # but still current from run 1's emission
@@ -255,13 +268,6 @@ def test_sized_state_session_caps_state_partitions(spark, tmp_path):
     ground truth for how many stores the stream actually committed."""
     import decimal
     import os
-
-    from cdc_kafka_project_spark.streaming.stateful import (
-        latest_totals,
-        run_stateful_totals,
-        sized_state_session,
-        stateful_shuffle_width,
-    )
 
     base_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert stateful_shuffle_width(spark, 3) == min(base_width, 3)
@@ -287,9 +293,7 @@ def test_sized_state_session_caps_state_partitions(spark, tmp_path):
     spark.createDataFrame(rows, EMPLOYEE_SALARIES_SCHEMA).coalesce(
         1
     ).write.mode("append").parquet(str(src))
-    run_stateful_totals(
-        sess, str(src), EMPLOYEE_SALARIES_SCHEMA, cp, out
-    ).awaitTermination()
+    run_stateful_totals(_salaries_stream(sess, str(src)), cp, out).awaitTermination()
     got = {
         r.department: r.total_salary
         for r in latest_totals(spark, out).collect()
@@ -299,96 +303,6 @@ def test_sized_state_session_caps_state_partitions(spark, tmp_path):
     state_dirs = os.listdir(os.path.join(cp, "state", "0"))
     n_parts = len([x for x in state_dirs if x.isdigit()])
     assert n_parts == min(base_width, 3), state_dirs
-
-
-def test_tws_plan_builds_without_execution(spark, tmp_path):
-    """The transformWithStateInPandas plan must CONSTRUCT in any
-    environment (protobuf is an execution-time dependency only):
-    streaming flag set, output schema as declared."""
-    from cdc_kafka_project_spark.streaming.stateful import running_totals_tws
-
-    src = tmp_path / "tws_plan_src"
-    src.mkdir()
-    stream = spark.readStream.schema(EMPLOYEE_SALARIES_SCHEMA).parquet(str(src))
-    out = running_totals_tws(stream)
-    assert out.isStreaming
-    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
-        ("department", "string"),
-        ("total_salary", "bigint"),
-    ]
-
-
-def test_tws_running_totals_parity_and_restart(spark, tmp_path):
-    """transformWithStateInPandas (the current Spark 4.x stateful API,
-    RocksDB-backed) must produce the same totals as the built-in
-    aggregation in running_totals_stateful and resume state across
-    bounded runs. Skips when google.protobuf is absent (TWS's state
-    protocol dependency; not shipped in this container)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState requires protobuf for its state protocol",
-    )
-    import decimal
-
-    from cdc_kafka_project_spark.streaming.stateful import running_totals_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "sal_tws"
-        src.mkdir()
-        d = dt.date(2015, 1, 1)
-        cp = str(tmp_path / "cp_tws")
-
-        def run():
-            stream = spark.readStream.schema(EMPLOYEE_SALARIES_SCHEMA).parquet(
-                str(src)
-            )
-            q = (
-                running_totals_tws(stream)
-                .writeStream.outputMode("update")
-                .format("memory")
-                .queryName("tws_totals")
-                .option("checkpointLocation", cp)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        first = [
-            ("ECC", "d1", "t", d, decimal.Decimal("100.75")),
-            ("CIT", "d1", "t", d, decimal.Decimal("200.25")),
-        ]
-        spark.createDataFrame(first, EMPLOYEE_SALARIES_SCHEMA).coalesce(
-            1
-        ).write.mode("append").parquet(str(src))
-        run()
-        got1 = {
-            r.department: r.total_salary
-            for r in spark.table("tws_totals").collect()
-        }
-        assert got1 == {"ECC": 100, "CIT": 200}
-
-        second = [("ECC", "d2", "t", d, decimal.Decimal("49.50"))]
-        spark.createDataFrame(second, EMPLOYEE_SALARIES_SCHEMA).coalesce(
-            1
-        ).write.mode("append").parquet(str(src))
-        run()  # memory sink resets per run; emission covers batch 2 only
-        got2 = {
-            r.department: r.total_salary
-            for r in spark.table("tws_totals").collect()
-        }
-        assert got2["ECC"] == 149  # resumed 100 + floor(49.50)
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_streaming_scd2_view_equals_batch_over_merged_log(spark, tmpdirs):

@@ -26,7 +26,7 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from cdc_kafka_project_spark import cache
 from cdc_kafka_project_spark.catalog import load_table
@@ -36,7 +36,10 @@ from cdc_kafka_project_spark.streaming.kafka_io import (
     decode_envelope,
     encode_envelope,
 )
-from cdc_kafka_project_spark.streaming.stateful import running_totals_stateful
+from cdc_kafka_project_spark.streaming.stateful import (
+    latest_totals,
+    run_stateful_totals,
+)
 
 #: sf0.1 = 100k events (the bench scale); point SPARK_GRAFT_SOAK_DIR at
 #: spark-warehouse/scale/sf1.0 for the 1M-row 10x-replica soak (the
@@ -50,55 +53,21 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def _run_totals(spark, log, topic, work, batch_tag):
+def _run_totals(spark, log, topic, ckpt, out_dir):
     """One bounded availableNow replay of the topic through
     envelope-decode -> stateful per-type totals -> parquet sink;
-    returns the set of epoch ids the run committed."""
-    out_dir = os.path.join(work, "totals")
-    ckpt = os.path.join(work, "ckpt")
-
+    returns the epoch ids the run committed."""
     raw = log.raw_stream(spark, topic, max_files_per_trigger=1)
     decoded = decode_envelope(raw, TESTDATA_SCHEMAS["events"])
     typed = decoded.filter(F.col("payload").isNotNull()).select(
         F.col("payload.event_type").alias("event_type"),
         F.col("payload.value").alias("value"),
     )
-    totals = running_totals_stateful(
-        typed, group_col="event_type", amount_col="value"
-    )
-
-    epochs: list[int] = []
-
-    def write_batch(batch_df, epoch_id: int) -> None:
-        epochs.append(int(epoch_id))
-        batch_df.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    q = (
-        totals.writeStream.outputMode("update")
-        .queryName(f"soak_totals_{batch_tag}")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    q = run_stateful_totals(
+        typed, ckpt, out_dir, group_col="event_type", amount_col="value"
     )
     q.awaitTermination()
-    return epochs
-
-
-def _latest_totals(spark, work):
-    """Latest emission per group from the update-mode sink log."""
-    out_dir = os.path.join(work, "totals")
-    w = F.row_number().over(
-        Window.partitionBy("event_type").orderBy(F.col("__epoch").desc())
-    )
-    return (
-        spark.read.parquet(out_dir)
-        .withColumn("__rn", w)
-        .filter(F.col("__rn") == 1)
-        .select("event_type", "total_salary")
-    )
+    return [int(p["batchId"]) for p in q.recentProgress]
 
 
 def _batch_twin(events):
@@ -116,7 +85,7 @@ def test_soak_replay_resume_matches_batch(spark, tmp_path):
     log = EmbeddedLog(str(tmp_path / "log"))
     topic = "events-soak"
     log.create_topic(topic, num_partitions=4)
-    work = str(tmp_path / "work")
+    ckpt, totals_dir = str(tmp_path / "ckpt"), str(tmp_path / "totals")
 
     enc = encode_envelope(events, "event_id", passthrough=(F.col("event_id"),))
     # 8 chunked appends (4 per phase): each append lands as its own
@@ -130,10 +99,11 @@ def test_soak_replay_resume_matches_batch(spark, tmp_path):
     # ---- phase A: half the log, replayed in bounded micro-batches ----
     published_a = sum(log.publish(c, topic) for c in chunks[:4])
     assert published_a == events.filter(F.col("event_id") % 8 < 4).count()
-    epochs_a = _run_totals(spark, log, topic, work, "a")
+    epochs_a = _run_totals(spark, log, topic, ckpt, totals_dir)
     assert len(epochs_a) >= 2, "replay must be multi-batch to soak state"
     mid = {
-        r.event_type: r.total_salary for r in _latest_totals(spark, work).collect()
+        r.event_type: r.total_salary
+        for r in latest_totals(spark, totals_dir, "event_type").collect()
     }
     expect_mid = {
         r.event_type: r.total_salary
@@ -146,13 +116,14 @@ def test_soak_replay_resume_matches_batch(spark, tmp_path):
     # ---- phase B: publish the rest, RESUME from the same checkpoint ----
     for c in chunks[4:]:
         log.publish(c, topic)
-    epochs_b = _run_totals(spark, log, topic, work, "b")
+    epochs_b = _run_totals(spark, log, topic, ckpt, totals_dir)
     # the resumed run continues the epoch sequence (processes only the
     # new files) instead of restarting from batch 0
     assert min(epochs_b) > max(epochs_a), (epochs_a, epochs_b)
 
     final = {
-        r.event_type: r.total_salary for r in _latest_totals(spark, work).collect()
+        r.event_type: r.total_salary
+        for r in latest_totals(spark, totals_dir, "event_type").collect()
     }
     expect = {
         r.event_type: r.total_salary for r in _batch_twin(events).collect()
