@@ -85,6 +85,24 @@ def table_rows(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
+def index_dir(sf_dir: str, name: str) -> str:
+    """Where the materialized index ``name`` over ``sf_dir``'s tables
+    lives: ``<root>/<sf tag>/<name>``, the root read from the
+    environment variable below and by default this checkout's
+    ``spark-warehouse/indexes``. Local scratch here; on a cluster the
+    root is a shared-store prefix."""
+    base = os.environ.get(
+        "SPARK_GRAFT_INDEX_DIR",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "spark-warehouse",
+            "indexes",
+        ),
+    )
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(base, tag, name)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     use = names or TESTDATA_TABLES
     return {n: load_table(spark, sf_dir, n) for n in use}

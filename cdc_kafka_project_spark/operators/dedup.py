@@ -864,67 +864,6 @@ def est_jaccard_expr(sig_a, sig_b):
     return eq / F.size(sig_a)
 
 
-def build_minhash_index(
-    docs: DataFrame,
-    path: str,
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-    rows: int = 4,
-    fingerprint: str | None = None,
-) -> None:
-    """Materialize the near-dup index: signatures + band table on disk.
-
-    Layout: ``sigs/`` (doc_id, sig) and ``bands/`` (band_hash bucket
-    rows) parquet, parameters in the JSON sidecar. The arriving-batch
-    dedup story (`probe_minhash_index` / `append_to_minhash_index`)
-    then never recomputes anything for the standing corpus — the
-    FAISS add-vs-train distinction applied to text: signatures are
-    incremental per doc, so unlike IVF there is no quantizer to drift
-    and the index never needs a periodic retrain.
-    """
-    import os
-
-    from cdc_kafka_project_spark.operators.similarity import (
-        _write_model,
-        corpus_fingerprint,
-    )
-
-    fp = fingerprint if fingerprint is not None else corpus_fingerprint(
-        docs, _minhash_params(n, num_perm, bands, rows)
-    )
-    sigs = cache.scoped_localcheckpoint(
-        minhash_signatures(docs, n=n, num_perm=num_perm, with_digest=True)
-    )
-    try:
-        sigs.write.mode("overwrite").parquet(os.path.join(path, "sigs"))
-        minhash_band_table(sigs, bands=bands, rows=rows).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(path, "bands"))
-    finally:
-        # both consumers (the two writes) are done — the signature
-        # blocks are dead weight the moment this function returns
-        cache.release_checkpoint(sigs)
-    _write_model(
-        path, {"kind": "minhash", "n": n, "num_perm": num_perm,
-               "bands": bands, "rows": rows, "fingerprint": fp}
-    )
-    # path-level completion marker (sigs/bands land in subdirs, so the
-    # parquet writes' own _SUCCESS files are not at `path`) — written
-    # LAST so a crashed build never looks complete to index_exists
-    with open(os.path.join(path, "_SUCCESS"), "w"):
-        pass
-
-
-def _minhash_params(n: int, num_perm: int, bands: int, rows: int) -> dict:
-    # fmt 2 (r11): sigs/ carries a sha-256 content digest per doc, so
-    # exact-tier probe verification serves from the index instead of
-    # re-scanning the corpus; the bump makes pre-digest indexes read
-    # as stale and rebuild on the next ensure_*
-    return {"kind": "minhash", "n": n, "num_perm": num_perm,
-            "bands": bands, "rows": rows, "fmt": 2}
-
-
 def ensure_minhash_index(
     docs: DataFrame,
     path: str,
@@ -933,29 +872,55 @@ def ensure_minhash_index(
     bands: int = 16,
     rows: int = 4,
 ) -> None:
-    """Build the MinHash index iff absent OR stale (source files or
-    params changed) — same fingerprint contract as the ANN
-    ``ensure_*`` builders, so a regenerated corpus can never be probed
-    against last generation's signatures. Note the append interplay:
-    ``append_to_minhash_index`` changes neither the stored fingerprint
-    nor the original source files, so calling ensure with the original
-    unchanged corpus reads an appended-to index as FRESH (probes see
-    the appended entries — the desired incremental-ingest behavior);
-    only a change to the ORIGINAL corpus or the params triggers a
-    rebuild, which drops the appended rows with the rest. Incremental-
-    ingest callers therefore manage their path explicitly via
-    ``append_to_minhash_index`` and re-ensure only on full refresh."""
-    from cdc_kafka_project_spark.operators.similarity import (
-        corpus_fingerprint,
-        index_exists,
-    )
+    """Materialize the near-dup index iff absent OR stale (source files
+    or params changed) — the ``ensure_index`` lifecycle the ANN indexes
+    share, so a regenerated corpus can never be probed against last
+    generation's signatures.
 
-    fp = corpus_fingerprint(docs, _minhash_params(n, num_perm, bands, rows))
-    if not index_exists(path, fp):
-        build_minhash_index(
-            docs, path, n=n, num_perm=num_perm, bands=bands, rows=rows,
-            fingerprint=fp,
+    Layout: ``sigs/`` (doc_id, sig) and ``bands/`` (band_hash bucket
+    rows) parquet, parameters in the JSON sidecar. The arriving-batch
+    dedup story (`probe_minhash_index` / `append_to_minhash_index`)
+    then never recomputes anything for the standing corpus — the
+    FAISS add-vs-train distinction applied to text: signatures are
+    incremental per doc, so unlike IVF there is no quantizer to drift
+    and the index never needs a periodic retrain.
+
+    Note the append interplay: ``append_to_minhash_index`` changes
+    neither the stored fingerprint nor the original source files, so
+    calling ensure with the original unchanged corpus reads an
+    appended-to index as FRESH (probes see the appended entries — the
+    desired incremental-ingest behavior); only a change to the ORIGINAL
+    corpus or the params triggers a rebuild, which drops the appended
+    rows with the rest. Incremental-ingest callers therefore manage
+    their path explicitly via ``append_to_minhash_index`` and re-ensure
+    only on full refresh."""
+    import os
+
+    from cdc_kafka_project_spark.operators.similarity import ensure_index
+
+    def build(path):
+        sigs = cache.scoped_localcheckpoint(
+            minhash_signatures(docs, n=n, num_perm=num_perm, with_digest=True)
         )
+        try:
+            sigs.write.mode("overwrite").parquet(os.path.join(path, "sigs"))
+            minhash_band_table(sigs, bands=bands, rows=rows).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(path, "bands"))
+        finally:
+            # both consumers (the two writes) are done — the signature
+            # blocks are dead weight the moment the build returns
+            cache.release_checkpoint(sigs)
+        return {"kind": "minhash", "n": n, "num_perm": num_perm,
+                "bands": bands, "rows": rows}
+
+    # fmt 2 (r11): sigs/ carries a sha-256 content digest per doc, so
+    # exact-tier probe verification serves from the index instead of
+    # re-scanning the corpus; the bump makes pre-digest indexes read
+    # as stale and rebuild on the next ensure_*
+    params = {"kind": "minhash", "n": n, "num_perm": num_perm,
+              "bands": bands, "rows": rows, "fmt": 2}
+    ensure_index(docs, path, params, build)
 
 
 def append_to_minhash_index(new_docs: DataFrame, path: str) -> None:

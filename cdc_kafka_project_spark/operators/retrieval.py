@@ -19,7 +19,7 @@ benchmark question?"). Two tiers, mirroring the embedding-ANN design:
   (buckets of query terms)`), so Catalyst prunes to the probed
   directories before any I/O — probe cost is O(postings of the query
   terms), independent of corpus size. The text analog of the IVF
-  embedding index (same fingerprint-checked rebuild contract).
+  embedding index (same ``similarity.ensure_index`` rebuild lifecycle).
 
 Cross-engine determinism: BM25 sums per-term float scores, and float
 addition is order-dependent. Per-term scores are therefore rounded to
@@ -176,65 +176,47 @@ def _bucket(word: Column) -> Column:
     return F.pmod(F.xxhash64(word), F.lit(N_TOKEN_BUCKETS)).cast("int")
 
 
-def build_token_index(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fingerprint=None,
+def ensure_token_index(
+    df: DataFrame, path: str, text_col: str = "text", id_col: str = "doc_id"
 ) -> None:
-    """Write the inverted index: one row per (word, doc) posting with
+    """Write the inverted index iff absent or stale (``ensure_index``,
+    the ANN indexes' lifecycle): one row per (word, doc) posting with
     tf, the doc's length, and the word's df denormalized onto it (df
     rides along so a probe needs no second input), parquet partitioned
     by the 64-way token-hash bucket. Corpus stats (N, avgdl) go in the
     sidecar model JSON. Build cost: one explode + one (doc,word)
     aggregation + one |vocab| window — the same work a single BM25
     query does for ALL terms at once, paid once per corpus version."""
-    from cdc_kafka_project_spark.operators.similarity import _write_model
+    from cdc_kafka_project_spark.operators.similarity import ensure_index
 
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.transform(tokens(text_col), lambda t: F.lower(t))).alias(
-            "word"
-        ),
-    )
-    tf = toks.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    dl = df.select(F.col(id_col), token_count(text_col).alias("dl"))
-    postings = (
-        tf.join(dfreq, "word")
-        .join(dl, id_col)
-        .select(id_col, "word", "tf", "df", "dl", _bucket(F.col("word")).alias("__tbucket"))
-    )
-    postings.write.mode("overwrite").partitionBy("__tbucket").parquet(path)
-    stats = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(token_count(text_col)).alias("sum_dl"),
-    ).collect()[0]
-    _write_model(
-        path,
-        {
+    def build(path):
+        toks = df.select(
+            F.col(id_col),
+            F.explode(
+                F.transform(tokens(text_col), lambda t: F.lower(t))
+            ).alias("word"),
+        )
+        tf = toks.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
+        dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+        dl = df.select(F.col(id_col), token_count(text_col).alias("dl"))
+        postings = (
+            tf.join(dfreq, "word")
+            .join(dl, id_col)
+            .select(id_col, "word", "tf", "df", "dl", _bucket(F.col("word")).alias("__tbucket"))
+        )
+        postings.write.mode("overwrite").partitionBy("__tbucket").parquet(path)
+        stats = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(token_count(text_col)).alias("sum_dl"),
+        ).collect()[0]
+        return {
             "kind": "token_index",
             "n_docs": int(stats["n"]),
             "avgdl": float(stats["sum_dl"]) / float(stats["n"]),
             "n_buckets": N_TOKEN_BUCKETS,
-            "fingerprint": fingerprint,
-        },
-    )
+        }
 
-
-def ensure_token_index(
-    df: DataFrame, path: str, text_col: str = "text", id_col: str = "doc_id"
-) -> None:
-    """Build iff absent or stale — same contract as the ANN indexes."""
-    from cdc_kafka_project_spark.operators.similarity import (
-        corpus_fingerprint,
-        index_exists,
-    )
-
-    fp = corpus_fingerprint(df, {"kind": "token_index", "v": 1})
-    if not index_exists(path, fp):
-        build_token_index(df, path, text_col, id_col, fingerprint=fp)
+    ensure_index(df, path, {"kind": "token_index", "v": 1}, build)
 
 
 def probe_token_index(

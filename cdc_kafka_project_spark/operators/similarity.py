@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import math
 import random
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -268,22 +269,18 @@ def ensure_kmeans_model(
 ) -> list[list[float]]:
     """Fingerprint-cached k-means centroids: train iff the model at
     ``path`` is absent or stale (source files or params changed), else
-    return the persisted centroids — the same staleness contract as
-    ``ensure_lsh_index``. Lets repeated runs (bench steady state,
+    return the persisted centroids — the ``ensure_index`` lifecycle
+    with a model-only "index". Lets repeated runs (bench steady state,
     SemDeDup re-curation) pay only the distributed assignment pass,
     never a retrain. (Round-5 verdict item 5.)"""
-    import os
-
     params = {"kind": "kmeans", "k": k, "iters": iters,
               "max_train": max_train}
-    fp = corpus_fingerprint(embeddings, params)
-    if index_exists(path, fp):
-        return read_model(path)["centroids"]
-    C = kmeans_centroids(embeddings, k=k, iters=iters, max_train=max_train)
-    _write_model(path, {**params, "centroids": C, "fingerprint": fp})
-    with open(os.path.join(path, "_SUCCESS"), "w"):
-        pass
-    return C
+
+    def build(_path):  # the model is the whole index: no data files
+        C = kmeans_centroids(embeddings, k=k, iters=iters, max_train=max_train)
+        return {**params, "centroids": C}
+
+    return ensure_index(embeddings, path, params, build)["centroids"]
 
 
 def ivf_index(embeddings: DataFrame, centroids: list[list[float]]) -> DataFrame:
@@ -396,82 +393,91 @@ def corpus_fingerprint(df: DataFrame, params: dict) -> str | None:
 _NO_FP = object()  # "don't validate" — distinct from fingerprint=None
 
 
+def _fresh_model(path: str, fingerprint: str | None) -> dict | None:
+    """The stored model of the complete index at ``path`` iff it was
+    built from ``fingerprint``, else None. A mismatched or ``None``
+    fingerprint (non-file input, so identity can't be established) is
+    never fresh, so regenerated data or changed params force a rebuild
+    instead of silently serving stale results."""
+    if fingerprint is None or not index_exists(path):
+        return None
+    try:
+        model = read_model(path)
+    except (OSError, ValueError):  # unreadable sidecar: treat as stale
+        return None
+    return model if model.get("fingerprint") == fingerprint else None
+
+
 def index_exists(path: str, fingerprint=_NO_FP) -> bool:
     """True iff a complete index lives at ``path`` AND (when a
     fingerprint argument is supplied) it was built from the same source
-    files and parameters. A mismatched or ``None`` fingerprint (non-file
-    input, so identity can't be established) fails the check, so
-    regenerated data or changed params force a rebuild instead of
-    silently serving stale results."""
+    files and parameters (see ``_fresh_model``)."""
     import os
 
-    if not (
-        os.path.exists(_model_path(path))
-        and os.path.exists(os.path.join(path, "_SUCCESS"))
-    ):
-        return False
-    if fingerprint is _NO_FP:
-        return True
-    if fingerprint is None:
-        return False
-    try:
-        return read_model(path).get("fingerprint") == fingerprint
-    except Exception:
-        return False
+    if fingerprint is not _NO_FP:
+        return _fresh_model(path, fingerprint) is not None
+    return os.path.exists(_model_path(path)) and os.path.exists(
+        os.path.join(path, "_SUCCESS")
+    )
 
 
-def build_lsh_index(
-    embeddings: DataFrame,
-    path: str,
-    n_planes: int = 8,
-    seed: int = 42,
-    fingerprint: str | None = None,
-) -> None:
-    """Materialize the hyperplane-LSH index: one corpus pass assigns
-    sign-pattern buckets, written parquet ``partitionBy("__bucket")``
-    (≤ 2^n_planes directories). Map-only + one partitioned write; the
-    hyperplane model rides alongside as JSON."""
-    # ensure_lsh_index passes the fingerprint it already computed; a
-    # direct call computes it here (one metadata sweep either way)
-    fp = fingerprint if fingerprint is not None else corpus_fingerprint(
-        embeddings, {"kind": "lsh", "n_planes": n_planes, "seed": seed}
-    )
-    dim = int(embeddings.select(F.size("embedding")).head()[0])
-    planes = _hyperplanes(dim, n_planes, seed)
-    (
-        spread(embeddings)
-        .withColumn("__bucket", lsh_bucket_expr(F.col("embedding"), planes))
-        # cluster rows by bucket before the partitioned write: without
-        # this every write task emits a file into every bucket dir
-        # (tasks x buckets tiny files); with it each bucket is one
-        # contiguous file — the open-cost a probe pays is |buckets
-        # probed|, not |buckets x build tasks|
-        .repartition(F.col("__bucket"))
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(path)
-    )
-    _write_model(
-        path,
-        {"kind": "lsh", "n_planes": n_planes, "planes": planes,
-         "fingerprint": fp},
-    )
+def ensure_index(
+    source: DataFrame, path: str, params: dict, build: Callable[[str], dict]
+) -> dict:
+    """The one materialized-index lifecycle every ``ensure_*`` runs.
+
+    Fresh — a complete index at ``path`` whose sidecar fingerprint
+    equals ``corpus_fingerprint(source, params)``: return the stored
+    model (no Spark job, one sidecar read). Otherwise ``build(path)``
+    writes the index data and returns the model fields; the sidecar
+    (fields + fingerprint) is written next and the ``_SUCCESS`` marker
+    LAST, so a build that raises or crashes never leaves a model that
+    matches, and the next call builds again. Single writer per path is
+    assumed (concurrent builders would race the overwrite)."""
+    import os
+
+    fp = corpus_fingerprint(source, params)
+    model = _fresh_model(path, fp)
+    if model is not None:
+        return model
+    model = {**build(path), "fingerprint": fp}
+    _write_model(path, model)
+    with open(os.path.join(path, "_SUCCESS"), "w"):
+        pass
+    return model
 
 
 def ensure_lsh_index(
     embeddings: DataFrame, path: str, n_planes: int = 8, seed: int = 42
 ) -> None:
-    """Build the LSH index iff absent OR stale (source files or params
-    changed since it was written) — the single check+build definition
-    the query layer uses. Single-writer per path is assumed (concurrent
-    builders would race the overwrite)."""
-    fp = corpus_fingerprint(
-        embeddings, {"kind": "lsh", "n_planes": n_planes, "seed": seed}
-    )
-    if not index_exists(path, fp):
-        build_lsh_index(
-            embeddings, path, n_planes=n_planes, seed=seed, fingerprint=fp
+    """Materialize the hyperplane-LSH index iff absent or stale
+    (``ensure_index``): one corpus pass assigns sign-pattern buckets,
+    written parquet ``partitionBy("__bucket")`` (≤ 2^n_planes
+    directories). Map-only + one partitioned write; the hyperplane
+    model rides alongside as JSON."""
+
+    def build(path):
+        dim = int(embeddings.select(F.size("embedding")).head()[0])
+        planes = _hyperplanes(dim, n_planes, seed)
+        (
+            spread(embeddings)
+            .withColumn("__bucket", lsh_bucket_expr(F.col("embedding"), planes))
+            # cluster rows by bucket before the partitioned write: without
+            # this every write task emits a file into every bucket dir
+            # (tasks x buckets tiny files); with it each bucket is one
+            # contiguous file — the open-cost a probe pays is |buckets
+            # probed|, not |buckets x build tasks|
+            .repartition(F.col("__bucket"))
+            .write.mode("overwrite")
+            .partitionBy("__bucket")
+            .parquet(path)
         )
+        return {"kind": "lsh", "n_planes": n_planes, "planes": planes}
+
+    ensure_index(
+        embeddings, path, {"kind": "lsh", "n_planes": n_planes, "seed": seed},
+        build,
+    )
 
 
 def pruned_partition_read(spark, path: str, part_col: str, values) -> DataFrame:
@@ -546,37 +552,6 @@ def probe_lsh_index(
     )
 
 
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    k_centroids: int = 16,
-    iters: int = 5,
-    max_train: int = 100_000,
-    fingerprint: str | None = None,
-) -> None:
-    """Materialize the IVF index: train the coarse quantizer on a
-    bounded sample (``kmeans_centroids``), assign every vector to its
-    inverted list, write parquet ``partitionBy("cid")`` with the
-    centroid model alongside."""
-    fp = fingerprint if fingerprint is not None else corpus_fingerprint(
-        embeddings,
-        {"kind": "ivf", "k": k_centroids, "iters": iters,
-         "max_train": max_train},
-    )
-    centroids = kmeans_centroids(
-        embeddings, k=k_centroids, iters=iters, max_train=max_train
-    )
-    (
-        ivf_index(embeddings, centroids)
-        .repartition(F.col("cid"))  # one file per list, not per task
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(path)
-    )
-    _write_model(path, {"kind": "ivf", "centroids": centroids,
-                        "fingerprint": fp})
-
-
 def ensure_ivf_index(
     embeddings: DataFrame,
     path: str,
@@ -584,23 +559,37 @@ def ensure_ivf_index(
     iters: int = 5,
     max_train: int = 100_000,
 ) -> None:
-    """Build the IVF index iff absent or stale — see ensure_lsh_index."""
-    fp = corpus_fingerprint(
+    """Materialize the IVF index iff absent or stale (``ensure_index``):
+    train the coarse quantizer on a bounded sample
+    (``kmeans_centroids``), assign every vector to its inverted list,
+    write parquet ``partitionBy("cid")`` with the centroid model
+    alongside."""
+
+    def build(path):
+        centroids = kmeans_centroids(
+            embeddings, k=k_centroids, iters=iters, max_train=max_train
+        )
+        (
+            ivf_index(embeddings, centroids)
+            .repartition(F.col("cid"))  # one file per list, not per task
+            .write.mode("overwrite")
+            .partitionBy("cid")
+            .parquet(path)
+        )
+        return {"kind": "ivf", "centroids": centroids}
+
+    ensure_index(
         embeddings,
+        path,
         {"kind": "ivf", "k": k_centroids, "iters": iters,
          "max_train": max_train},
+        build,
     )
-    if not index_exists(path, fp):
-        build_ivf_index(
-            embeddings, path, k_centroids=k_centroids, iters=iters,
-            max_train=max_train, fingerprint=fp,
-        )
 
 
 def append_to_ivf_index(
     new_embeddings: DataFrame,
     path: str,
-    fingerprint: str | None = None,
 ) -> None:
     """Incremental IVF maintenance: assign ONLY the new vectors with
     the index's EXISTING centroid model and append them to the
@@ -609,15 +598,12 @@ def append_to_ivf_index(
     touches O(|delta|) data, while a rebuild would re-scan and re-write
     the whole corpus. Amortized maintenance contract: the quantizer
     drifts as the distribution shifts, so rebuild (ensure_ivf_index
-    with a fresh fingerprint) on a slow cadence and append between
+    over the grown corpus) on a slow cadence and append between
     rebuilds — the FAISS add-vs-train distinction, applied to a
-    partitioned parquet layout.
+    partitioned parquet layout. The stored model is not touched.
 
-    ``fingerprint``: optional new corpus fingerprint recorded in the
-    model so ``index_exists`` keeps treating the index as current for
-    the grown corpus. Callers are responsible for not appending
-    vec_ids already present (dedup upstream) — parquet append cannot
-    check uniqueness.
+    Callers are responsible for not appending vec_ids already present
+    (dedup upstream) — parquet append cannot check uniqueness.
     """
     model = read_model(path)
     if model.get("kind") != "ivf":
@@ -630,9 +616,6 @@ def append_to_ivf_index(
         .partitionBy("cid")
         .parquet(path)
     )
-    if fingerprint is not None:
-        model["fingerprint"] = fingerprint
-        _write_model(path, model)
 
 
 def probe_ivf_index(
@@ -1180,43 +1163,6 @@ def pq_adc_topk(
     )
 
 
-def build_pq_index(
-    embeddings: DataFrame,
-    path: str,
-    m: int = 8,
-    k_codes: int = 16,
-    iters: int = 5,
-    max_train: int = 100_000,
-    fingerprint: str | None = None,
-) -> None:
-    """Materialize the PQ index: train codebooks on a bounded sample,
-    encode the corpus in one map pass, write (vec_id, codes) parquet —
-    the compressed twin the ADC scan reads instead of the embeddings.
-    No partitioning: ADC scans all codes by design; the win is the 8x
-    smaller scan, and row-group pruning has nothing to key on."""
-    fp = fingerprint if fingerprint is not None else corpus_fingerprint(
-        embeddings,
-        {"kind": "pq", "m": m, "k": k_codes, "iters": iters,
-         "max_train": max_train},
-    )
-    books = pq_train(
-        embeddings, m=m, k_codes=k_codes, iters=iters, max_train=max_train
-    )
-    (
-        spread(embeddings)
-        .select(
-            "vec_id", pq_code_expr(F.col("embedding"), books).alias("codes")
-        )
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    _write_model(
-        path,
-        {"kind": "pq", "m": m, "k": k_codes, "codebooks": books,
-         "fingerprint": fp},
-    )
-
-
 def ensure_pq_index(
     embeddings: DataFrame,
     path: str,
@@ -1225,18 +1171,34 @@ def ensure_pq_index(
     iters: int = 5,
     max_train: int = 100_000,
 ) -> None:
-    """Build the PQ index iff absent or stale (same contract as
-    ensure_lsh_index/ensure_ivf_index)."""
-    fp = corpus_fingerprint(
+    """Materialize the PQ index iff absent or stale (``ensure_index``):
+    train codebooks on a bounded sample, encode the corpus in one map
+    pass, write (vec_id, codes) parquet — the compressed twin the ADC
+    scan reads instead of the embeddings. No partitioning: ADC scans
+    all codes by design; the win is the 8x smaller scan, and row-group
+    pruning has nothing to key on."""
+
+    def build(path):
+        books = pq_train(
+            embeddings, m=m, k_codes=k_codes, iters=iters, max_train=max_train
+        )
+        (
+            spread(embeddings)
+            .select(
+                "vec_id", pq_code_expr(F.col("embedding"), books).alias("codes")
+            )
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+        return {"kind": "pq", "m": m, "k": k_codes, "codebooks": books}
+
+    ensure_index(
         embeddings,
+        path,
         {"kind": "pq", "m": m, "k": k_codes, "iters": iters,
          "max_train": max_train},
+        build,
     )
-    if not index_exists(path, fp):
-        build_pq_index(
-            embeddings, path, m=m, k_codes=k_codes, iters=iters,
-            max_train=max_train, fingerprint=fp,
-        )
 
 
 def probe_pq_index(

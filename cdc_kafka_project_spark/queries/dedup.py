@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_kafka_project_spark import cache
-from cdc_kafka_project_spark.catalog import load_table
+from cdc_kafka_project_spark.catalog import index_dir, load_table
 from cdc_kafka_project_spark.functions import fround, local_rows_df
 from cdc_kafka_project_spark.operators import dedup as dd
 from cdc_kafka_project_spark.registry import query
@@ -716,14 +716,7 @@ def dedup_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs clean, index growth visible to later probes — is pinned in
     tests/test_dedup.py.
     """
-    import os
-
-    base = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR", "/root/repo/spark-warehouse/indexes"
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(base, tag, "minhash")
-
+    path = index_dir(sf_dir, "minhash")
     docs = _docs(spark, sf_dir)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     dd.ensure_minhash_index(corpus, path, n=3, num_perm=64, bands=16, rows=4)

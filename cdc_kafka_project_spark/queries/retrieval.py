@@ -9,12 +9,10 @@ state), whose scores are pinned equal to the exact BM25 tier by pytest.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from cdc_kafka_project_spark import cache
-from cdc_kafka_project_spark.catalog import load_table
+from cdc_kafka_project_spark.catalog import index_dir, load_table
 from cdc_kafka_project_spark.operators import dedup as dd
 from cdc_kafka_project_spark.operators import retrieval as rt
 from cdc_kafka_project_spark.registry import query
@@ -35,14 +33,6 @@ MIX_ALPHA_TOTAL = 200
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
-
-
-def _index_dir(sf_dir: str, name: str) -> str:
-    base = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR", "/root/repo/spark-warehouse/indexes"
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(base, tag, name)
 
 
 @query("bm25_topk", oracle=rt.bm25_oracle_sql(QUERY_TERMS, k=TOP_K))
@@ -66,7 +56,7 @@ def text_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe is hash-checkable because the scores are exact, not
     approximate — only the SERVING path differs)."""
     docs = _docs(spark, sf_dir)
-    path = _index_dir(sf_dir, "token_index")
+    path = index_dir(sf_dir, "token_index")
     rt.ensure_token_index(docs, path)
     return rt.probe_token_index(spark, path, QUERY_TERMS, k=TOP_K)
 

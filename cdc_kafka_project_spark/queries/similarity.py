@@ -8,12 +8,10 @@ plus recall tests in tests/test_similarity.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_kafka_project_spark import cache
-from cdc_kafka_project_spark.catalog import load_table, table_rows
+from cdc_kafka_project_spark.catalog import index_dir, load_table, table_rows
 from cdc_kafka_project_spark.functions import fround, local_rows_df
 from cdc_kafka_project_spark.operators import similarity as sim
 from cdc_kafka_project_spark.registry import query
@@ -69,14 +67,28 @@ def _with_injected_dups(emb: DataFrame, n: int = N_INJECTED_DUPS) -> DataFrame:
     return emb.select("vec_id", "embedding", "label").unionByName(dups)
 
 
-def _index_dir(sf_dir: str, name: str) -> str:
-    """Per-scale-factor location for materialized ANN indexes. Local
-    scratch here; on a cluster this is a shared-store prefix."""
-    base = os.environ.get(
-        "SPARK_GRAFT_INDEX_DIR", "/root/repo/spark-warehouse/indexes"
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(base, tag, name)
+#: The standing ANN indexes over ``embeddings``: method -> (index dir
+#: name, ensure_* builder, build params). The single-method queries and
+#: ann_recall_report share these paths, so they must build with the same
+#: params — a drift would make each caller's fingerprint stale for the
+#: other and rebuild the index on every call.
+_ANN_INDEXES = {
+    "lsh": ("lsh_p8", sim.ensure_lsh_index, {"n_planes": 8}),
+    "ivf": ("ivf_k16", sim.ensure_ivf_index,
+            {"k_centroids": 16, "iters": 2, "max_train": 512}),
+    "pq": ("pq_m8k32", sim.ensure_pq_index,
+           {"m": 8, "k_codes": 32, "iters": 5, "max_train": 4096}),
+}
+
+
+def _ann_index(emb: DataFrame, sf_dir: str, method: str) -> str:
+    """Build the standing ``method`` index iff absent or stale
+    (fingerprint-checked: regenerated source data forces a rebuild)
+    and return its path."""
+    name, ensure, params = _ANN_INDEXES[method]
+    path = index_dir(sf_dir, name)
+    ensure(emb, path, **params)
+    return path
 
 
 @query(
@@ -244,9 +256,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     force additionally measured in tests/test_similarity.py."""
     emb = _emb(spark, sf_dir)
     qv = sim.query_vector(emb, QUERY_VEC_ID)
-    path = _index_dir(sf_dir, "lsh_p8")
-    # fingerprint-checked: regenerated source data forces a rebuild
-    sim.ensure_lsh_index(emb, path, n_planes=8)
+    path = _ann_index(emb, sf_dir, "lsh")
     probe = sim.probe_lsh_index(spark, path, qv, k=TOP_K, probe_hamming=1)
     return _probe_contract(emb, probe, "lsh", qv, err_bound=0.0)
 
@@ -301,9 +311,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs brute force is pinned in tests/test_similarity.py."""
     emb = _emb(spark, sf_dir)
     qv = sim.query_vector(emb, QUERY_VEC_ID)
-    path = _index_dir(sf_dir, "ivf_k16")
-    # fingerprint-checked: regenerated source data forces a rebuild
-    sim.ensure_ivf_index(emb, path, k_centroids=16, iters=2, max_train=512)
+    path = _ann_index(emb, sf_dir, "ivf")
     probe = sim.probe_ivf_index(spark, path, qv, k=TOP_K, nprobe=4)
     return _probe_contract(emb, probe, "ivf", qv, err_bound=0.0)
 
@@ -396,8 +404,7 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure; high on the clustered fixture)."""
     emb = _emb(spark, sf_dir)
     qv = sim.query_vector(emb, QUERY_VEC_ID)
-    path = _index_dir(sf_dir, "pq_m8k32")
-    sim.ensure_pq_index(emb, path, m=8, k_codes=32, iters=5, max_train=4096)
+    path = _ann_index(emb, sf_dir, "pq")
     probe = sim.probe_pq_index(spark, path, qv, k=TOP_K)
     return _probe_contract(emb, probe, "pq", qv, err_bound=PQ_ADC_ERR_BOUND)
 
@@ -467,12 +474,12 @@ def similarity_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count() job was one of 6 executed embedding scans here)
     n = table_rows(sf_dir, "embeddings") + N_INJECTED_DUPS
     k = sim.semdedup_k_for(n)
-    # fingerprint-cached centroids (same pattern as ensure_lsh_index):
+    # fingerprint-cached centroids (the ensure_index lifecycle):
     # steady-state runs pay assignment + cluster-scoped pairs only, the
     # bounded retrain happens once per corpus generation
     C = sim.ensure_kmeans_model(
         emb,
-        _index_dir(sf_dir, f"semdedup_k{k}"),
+        index_dir(sf_dir, f"semdedup_k{k}"),
         k=k,
         iters=2,
         max_train=max(512, 16 * k),
@@ -612,17 +619,11 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     same partition-pruned probes the individual queries run."""
     emb = _emb(spark, sf_dir)
     qv = sim.query_vector(emb, QUERY_VEC_ID)
-    # Build-if-absent with the SAME parameters the individual ANN
+    # Build-if-absent through the SAME definitions the individual ANN
     # queries use, so a standalone recall run measures the identical
     # materialized indexes (fingerprint-checked, so this is a no-op
     # when those queries already ran).
-    sim.ensure_lsh_index(emb, _index_dir(sf_dir, "lsh_p8"), n_planes=8)
-    sim.ensure_ivf_index(
-        emb, _index_dir(sf_dir, "ivf_k16"), k_centroids=16, iters=2, max_train=512
-    )
-    sim.ensure_pq_index(
-        emb, _index_dir(sf_dir, "pq_m8k32"), m=8, k_codes=32, iters=5, max_train=4096
-    )
+    paths = {m: _ann_index(emb, sf_dir, m) for m in _ANN_INDEXES}
     # ONE job for the exact truth scan AND all three probes (r16; was
     # truth-collect + probes-collect = two sequential submit→collect
     # round trips): the tagged union collects ≤ 4k rows in a single
@@ -633,13 +634,13 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("truth").alias("method"), "vec_id"
         ),
         sim.probe_lsh_index(
-            spark, _index_dir(sf_dir, "lsh_p8"), qv, k=TOP_K, probe_hamming=1
+            spark, paths["lsh"], qv, k=TOP_K, probe_hamming=1
         ).select(F.lit("lsh").alias("method"), "vec_id"),
         sim.probe_ivf_index(
-            spark, _index_dir(sf_dir, "ivf_k16"), qv, k=TOP_K, nprobe=4
+            spark, paths["ivf"], qv, k=TOP_K, nprobe=4
         ).select(F.lit("ivf").alias("method"), "vec_id"),
         sim.probe_pq_index(
-            spark, _index_dir(sf_dir, "pq_m8k32"), qv, k=TOP_K
+            spark, paths["pq"], qv, k=TOP_K
         ).select(F.lit("pq").alias("method"), "vec_id"),
     ]
     tagged = parts[0]
@@ -733,7 +734,7 @@ def embedding_index_pipeline_report(
          - np.asarray(model["mean"], dtype=np.float64))
         @ np.asarray(model["components"], dtype=np.float64).T
     ).tolist()
-    path = _index_dir(sf_dir, "ivf_pca8_k16")
+    path = index_dir(sf_dir, "ivf_pca8_k16")
     sim.ensure_ivf_index(proj, path, k_centroids=16, iters=2, max_train=512)
     probe = sim.probe_ivf_index(spark, path, q_pca, k=TOP_K, nprobe=4)
     truth = {

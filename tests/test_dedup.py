@@ -325,7 +325,7 @@ def test_minhash_index_probe_append_cycle(spark, tmp_path):
         "doc_id long, text string",
     )
     path = str(tmp_path / "mh")
-    dd.build_minhash_index(corpus, path, n=3, num_perm=64, bands=16, rows=4)
+    dd.ensure_minhash_index(corpus, path, n=3, num_perm=64, bands=16, rows=4)
     files_before = sorted(os.listdir(os.path.join(path, "sigs")))
 
     batch = spark.createDataFrame(

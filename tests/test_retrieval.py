@@ -71,7 +71,7 @@ def test_token_index_probe_matches_exact_tier(spark, docs, tmp_path):
     one-pass exact tier — df/dl/N/avgdl read from the index instead of
     recomputed, same micro arithmetic."""
     path = str(tmp_path / "tok_idx")
-    rt.build_token_index(docs, path)
+    rt.ensure_token_index(docs, path)
     exact = [(r.doc_id, r.n_terms_hit, r.score) for r in rt.bm25_topk(
         docs, ["spark", "table", "join"], k=10).collect()]
     probed = [(r.doc_id, r.n_terms_hit, r.score) for r in rt.probe_token_index(
@@ -85,7 +85,7 @@ def test_token_index_probe_partition_pruned(spark, docs, tmp_path):
     from cdc_kafka_project_spark.plans import partition_filters
 
     path = str(tmp_path / "tok_idx_prune")
-    rt.build_token_index(docs, path)
+    rt.ensure_token_index(docs, path)
     df = rt.probe_token_index(spark, path, ["spark"], k=5)
     pf = " ".join(partition_filters(df))
     assert "__tbucket" in pf, f"probe not partition-pruned: {pf!r}"

@@ -182,7 +182,7 @@ def test_lsh_index_probe_matches_query_time_formulation(corpus, tmp_path):
     materialization changes the plan, never the answer."""
     emb, q = corpus
     path = str(tmp_path / "lsh")
-    sim.build_lsh_index(emb, path, n_planes=8)
+    sim.ensure_lsh_index(emb, path, n_planes=8)
     assert sim.index_exists(path)
     spark = emb.sparkSession
     got = sim.probe_lsh_index(spark, path, q, k=11, probe_hamming=1).collect()
@@ -197,7 +197,7 @@ def test_ivf_index_probe_recall(corpus, tmp_path):
     corpus, scores exact, model persisted/reloaded."""
     emb, q = corpus
     path = str(tmp_path / "ivf")
-    sim.build_ivf_index(emb, path, k_centroids=8, iters=3, max_train=1000)
+    sim.ensure_ivf_index(emb, path, k_centroids=8, iters=3, max_train=1000)
     assert sim.index_exists(path)
     assert sim.read_model(path)["kind"] == "ivf"
     spark = emb.sparkSession
@@ -249,50 +249,150 @@ def test_training_sample_expected_size_within_max_train(corpus, spark):
     assert got <= 90, f"sample {got} exceeds ceil-bound expectation"
 
 
+def _emb_rows(rng):
+    return [(i, _unit(rng)) for i in range(40)], EMB_SCHEMA
+
+
+def _doc_rows(rng):
+    words = [f"w{i}" for i in range(30)]
+    return [
+        (i, " ".join(rng.choice(words) for _ in range(12))) for i in range(20)
+    ], "doc_id long, text string"
+
+
+def _index_lifecycle_kinds():
+    """kind -> (source rows, ensure(df, path, param), param, changed
+    param). The token index has no build parameter that enters its
+    fingerprint, so it has no changed-params case."""
+    from cdc_kafka_project_spark.operators import dedup as dd
+    from cdc_kafka_project_spark.operators import retrieval as rt
+
+    return {
+        "lsh": (_emb_rows, lambda df, p, v: sim.ensure_lsh_index(
+            df, p, n_planes=v), 4, 5),
+        "ivf": (_emb_rows, lambda df, p, v: sim.ensure_ivf_index(
+            df, p, k_centroids=v, iters=2, max_train=512), 4, 5),
+        "pq": (_emb_rows, lambda df, p, v: sim.ensure_pq_index(
+            df, p, m=4, k_codes=v, iters=2, max_train=512), 4, 8),
+        "kmeans": (_emb_rows, lambda df, p, v: sim.ensure_kmeans_model(
+            df, p, k=v, iters=2, max_train=512), 4, 5),
+        "minhash": (_doc_rows, lambda df, p, v: dd.ensure_minhash_index(
+            df, p, num_perm=v, bands=v // 4, rows=4), 64, 32),
+        "token": (_doc_rows, lambda df, p, v: rt.ensure_token_index(df, p),
+                  None, None),
+    }
+
+
 def test_index_fingerprint_staleness_forces_rebuild(spark, tmp_path):
-    """ensure_lsh_index: rebuilds when the source parquet changes,
-    skips the rebuild when it hasn't (fingerprint = file identity +
-    params). Silently serving an index built from old data is the bug
-    this pins."""
+    """Every ensure_* runs the one ensure_index lifecycle: no rebuild
+    while the source parquet and params are unchanged (model mtime
+    fixed), a rebuild when the source is rewritten or a param changes,
+    and a rebuild for every in-memory source (no file identity, so
+    index_exists(path, None) is False). Silently serving an index built
+    from old data is the bug this pins — for all six index kinds."""
     import os
     import time
 
+    for kind, (make_rows, ensure, param, changed) in (
+        _index_lifecycle_kinds().items()
+    ):
+        src = str(tmp_path / f"{kind}_src.parquet")
+        idx = str(tmp_path / kind)
+        model_file = os.path.join(idx, "_ann_model.json")
+        rng = random.Random(3)
+
+        def write_source():
+            rows, schema = make_rows(rng)  # rng advances: new content
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(src)
+
+        def rebuilt_since(t):
+            return os.path.getmtime(model_file) > t
+
+        write_source()
+        ensure(spark.read.parquet(src), idx, param)
+        t0 = os.path.getmtime(model_file)
+        fp0 = sim.read_model(idx)["fingerprint"]
+        assert fp0, kind  # file-backed input -> identity established
+        assert sim.index_exists(idx, fp0), kind
+
+        ensure(spark.read.parquet(src), idx, param)
+        assert not rebuilt_since(t0), f"{kind}: unchanged source rebuilt"
+
+        time.sleep(0.05)  # ensure distinguishable mtime on rewrite
+        write_source()
+        ensure(spark.read.parquet(src), idx, param)
+        assert rebuilt_since(t0), f"{kind}: rewritten source not rebuilt"
+        assert sim.read_model(idx)["fingerprint"] not in (None, fp0), kind
+
+        if changed is not None:
+            t1 = os.path.getmtime(model_file)
+            time.sleep(0.05)
+            ensure(spark.read.parquet(src), idx, changed)
+            assert rebuilt_since(t1), f"{kind}: changed params not rebuilt"
+
+        # in-memory input can't be fingerprinted -> conservative rebuild
+        mem = spark.createDataFrame(*make_rows(rng))
+        assert sim.corpus_fingerprint(mem, {"kind": kind}) is None, kind
+        assert sim.index_exists(idx, None) is False, kind
+        t2 = os.path.getmtime(model_file)
+        time.sleep(0.05)
+        ensure(mem, idx, param)
+        assert rebuilt_since(t2), f"{kind}: in-memory source not rebuilt"
+        assert sim.read_model(idx)["fingerprint"] is None, kind
+
+
+def test_ensure_index_failed_build_is_retried(spark, tmp_path, monkeypatch):
+    """A build that raises leaves no model that matches: ensure_*
+    propagates the error, and the next call with the same source builds
+    again — on an empty path and over a stale index alike."""
+    import os
+
     src = str(tmp_path / "emb.parquet")
-    idx = str(tmp_path / "lsh")
-    rng = random.Random(3)
-    rows = [(i, _unit(rng)) for i in range(40)]
-    spark.createDataFrame(rows, EMB_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
+    idx = str(tmp_path / "ivf")
+    rng = random.Random(5)
 
-    emb = spark.read.parquet(src)
-    sim.ensure_lsh_index(emb, idx, n_planes=4)
-    model_file = os.path.join(idx, "_ann_model.json")
-    t0 = os.path.getmtime(model_file)
+    def write_source():
+        spark.createDataFrame(*_emb_rows(rng)).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(src)
 
-    sim.ensure_lsh_index(spark.read.parquet(src), idx, n_planes=4)
-    assert os.path.getmtime(model_file) == t0  # unchanged source: no rebuild
+    def ensure():
+        sim.ensure_ivf_index(
+            spark.read.parquet(src), idx, k_centroids=4, iters=2,
+            max_train=512,
+        )
 
-    time.sleep(0.05)  # ensure distinguishable mtime on rewrite
-    rows2 = [(i, _unit(rng)) for i in range(40)]
-    spark.createDataFrame(rows2, EMB_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    emb2 = spark.read.parquet(src)
-    sim.ensure_lsh_index(emb2, idx, n_planes=4)
-    assert os.path.getmtime(model_file) > t0  # changed source: rebuilt
+    def failing_training(*args, **kwargs):
+        raise RuntimeError("training failed")
 
-    # changed params also rebuild
-    t1 = os.path.getmtime(model_file)
-    time.sleep(0.05)
-    sim.ensure_lsh_index(emb2, idx, n_planes=5)
-    assert os.path.getmtime(model_file) > t1
+    write_source()
+    real_training = sim.kmeans_centroids
+    monkeypatch.setattr(sim, "kmeans_centroids", failing_training)
+    with pytest.raises(RuntimeError, match="training failed"):
+        ensure()
+    assert not sim.index_exists(idx)
+    monkeypatch.setattr(sim, "kmeans_centroids", real_training)
+    ensure()
+    fp0 = sim.read_model(idx)["fingerprint"]
+    assert fp0 and sim.index_exists(idx, fp0)
 
-    # in-memory input can't be fingerprinted -> conservative rebuild
-    assert sim.corpus_fingerprint(
-        spark.createDataFrame(rows, EMB_SCHEMA), {"kind": "lsh"}
-    ) is None
-    assert sim.index_exists(idx, None) is False
+    write_source()  # the standing index is now stale
+    monkeypatch.setattr(sim, "kmeans_centroids", failing_training)
+    with pytest.raises(RuntimeError, match="training failed"):
+        ensure()
+    assert sim.read_model(idx)["fingerprint"] == fp0  # stale model kept
+    fp1 = sim.corpus_fingerprint(
+        spark.read.parquet(src),
+        {"kind": "ivf", "k": 4, "iters": 2, "max_train": 512},
+    )
+    assert fp1 != fp0 and not sim.index_exists(idx, fp1)
+    monkeypatch.setattr(sim, "kmeans_centroids", real_training)
+    ensure()
+    assert sim.read_model(idx)["fingerprint"] == fp1
+    assert spark.read.parquet(idx).count() == 40
+    assert os.path.exists(os.path.join(idx, "_SUCCESS"))
 
 
 def test_pq_codes_shape_and_range(corpus):
@@ -475,7 +575,7 @@ def test_ivf_incremental_append(corpus, spark, tmp_path):
     path = str(tmp_path / "ivf_incr")
     base = emb.filter(F.col("vec_id") < 200)
     delta = emb.filter(F.col("vec_id") >= 200)
-    sim.build_ivf_index(base, path, k_centroids=4, iters=2, max_train=512)
+    sim.ensure_ivf_index(base, path, k_centroids=4, iters=2, max_train=512)
     files_before = set(glob.glob(path + "/cid=*/part-*.parquet"))
 
     # a probe for an exact-duplicate pair that lives ONLY in the delta
@@ -500,7 +600,7 @@ def test_ivf_incremental_append(corpus, spark, tmp_path):
 def test_ivf_append_rejects_wrong_index_kind(corpus, tmp_path):
     emb, _ = corpus
     path = str(tmp_path / "lsh_not_ivf")
-    sim.build_lsh_index(emb.limit(50), path, n_planes=4)
+    sim.ensure_lsh_index(emb.limit(50), path, n_planes=4)
     with pytest.raises(ValueError, match="not an IVF index"):
         sim.append_to_ivf_index(emb.limit(5), path)
 
@@ -745,10 +845,10 @@ def test_fixture_margins_for_exact_twin_oracles(spark):
     import numpy as np
 
     from tests.conftest import SF_SMOKE
+    from cdc_kafka_project_spark.catalog import index_dir
     from cdc_kafka_project_spark.queries.similarity import (
         N_INJECTED_DUPS,
         _emb,
-        _index_dir,
         _with_injected_dups,
         dup_vec_id,
     )
@@ -766,7 +866,7 @@ def test_fixture_margins_for_exact_twin_oracles(spark):
 
     inj = _with_injected_dups(emb)
     C = sim.ensure_kmeans_model(
-        inj, _index_dir(SF_SMOKE, "semdedup_k16"), k=16, iters=2,
+        inj, index_dir(SF_SMOKE, "semdedup_k16"), k=16, iters=2,
         max_train=512,
     )
     cid = inj.select(

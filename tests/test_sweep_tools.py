@@ -430,6 +430,22 @@ def test_evidence_non_sweep_file_is_skipped(evidence_mod, tmp_path):
     assert evidence_mod.parse_log(str(log)) is None
 
 
+def test_evidence_regenerates_committed_scale_evidence(evidence_mod):
+    """SCALE_EVIDENCE.md is generated from the committed SWEEP_*.log
+    files (plus CORRECTNESS_r*.json): regenerating it must reproduce the
+    committed file, trailing whitespace aside, so deleting a sweep log —
+    the evidence itself — fails here instead of silently shrinking the
+    matrix."""
+    with open(os.path.join(ROOT, "SCALE_EVIDENCE.md")) as f:
+        committed = f.read()
+
+    def lines(text):
+        return [ln.rstrip() for ln in text.rstrip().splitlines()]
+
+    got = evidence_mod.render(evidence_mod.collect())
+    assert lines(got) == lines(committed)
+
+
 # ---------------------------------------------------------------------------
 # bench.py tail rotation (r15 verdict item 4)
 # ---------------------------------------------------------------------------
