@@ -19,8 +19,9 @@ properties that make it survive 100 TB where the reference's
 row-at-a-time apply cannot.
 
 All functions are generic over (key_cols, order_cols, action_col) and
-are shared by the batch and Structured Streaming paths (foreachBatch
-calls the same ``apply_changes``).
+are shared by the batch and Structured Streaming paths (the streaming
+pipeline routes with ``routes_to_dlq`` and reads its replica through
+the same ``apply_changes`` and ``compact_log``).
 """
 
 from __future__ import annotations
@@ -75,6 +76,16 @@ def employee_invalid_predicate(
     )
 
 
+def routes_to_dlq(invalid: Column) -> Column:
+    """True where a row goes to the DLQ: the validation predicate holds
+    or is NULL. The one NULL rule of both DLQ routes — the batch
+    ``validate_split`` and the streaming sink's ``route`` column
+    (streaming/pipeline.py). The reference would have crashed into its
+    broad except at consumer.py:95 on a NULL; we route, never swallow
+    (SURVEY §2 #28)."""
+    return F.coalesce(invalid, F.lit(True))
+
+
 def validate_split(
     df: DataFrame, invalid: Column
 ) -> tuple[DataFrame, DataFrame]:
@@ -84,11 +95,9 @@ def validate_split(
     a DLQ topic and drops them from the main flow; here both branches
     are filters over the same plan so the source is scanned once per
     sink, with the predicate pushed down. NULL-safe: rows where the
-    predicate is NULL are routed to the DLQ (the reference would have
-    crashed into its broad except at consumer.py:95 — we route, never
-    swallow; see SURVEY §2 #28).
+    predicate is NULL are routed to the DLQ (``routes_to_dlq``).
     """
-    inv = F.coalesce(invalid, F.lit(True))
+    inv = routes_to_dlq(invalid)
     return df.filter(~inv), df.filter(inv)
 
 
@@ -239,7 +248,8 @@ def compact_log(
     retain_deletes: bool = True,
 ) -> DataFrame:
     """Change-log compaction: the periodic maintenance job that keeps
-    the append-only curated log from growing without bound.
+    the append-only curated log from growing without bound (the
+    streaming replica's base, ``CdcFileStreamPipeline``).
 
     Rewrites the log to one row per key — the latest change — which is
     sufficient for every downstream read (``apply_changes`` over a

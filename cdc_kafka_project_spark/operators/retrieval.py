@@ -216,7 +216,12 @@ def ensure_token_index(
             "n_buckets": N_TOKEN_BUCKETS,
         }
 
-    ensure_index(df, path, {"kind": "token_index", "v": 1}, build)
+    ensure_index(
+        df,
+        path,
+        {"kind": "token_index", "v": 1, "text_col": text_col, "id_col": id_col},
+        build,
+    )
 
 
 def probe_token_index(

@@ -107,6 +107,29 @@ def test_token_index_rebuilds_only_when_stale(spark, docs, tmp_path):
     assert os.path.getmtime(model) == mtime
 
 
+def test_token_index_rebuilds_when_text_col_changes(spark, tmp_path):
+    """The indexed columns are part of the fingerprint: the same parquet
+    indexed over another text column must rebuild, and the new index
+    must answer for a word found only in that column."""
+    import os
+
+    src = str(tmp_path / "titled_src")
+    spark.createDataFrame(
+        [(0, "spark table join", "streaming replica"), (1, "table", "other words")],
+        "doc_id long, text string, title string",
+    ).write.parquet(src)
+    fdocs = spark.read.parquet(src)
+    path = str(tmp_path / "tok_idx_cols")
+    rt.ensure_token_index(fdocs, path, text_col="text")
+    model = os.path.join(path, "_ann_model.json")
+    mtime = os.path.getmtime(model)
+    assert rt.probe_token_index(spark, path, ["replica"], k=5).collect() == []
+    rt.ensure_token_index(fdocs, path, text_col="title")
+    assert os.path.getmtime(model) != mtime
+    hits = rt.probe_token_index(spark, path, ["replica"], k=5).collect()
+    assert [r.doc_id for r in hits] == [0]
+
+
 def test_hard_negatives_band_and_exclusions(spark):
     """Band membership on the rounded cosine, self excluded, top-k per
     anchor with vec_id tiebreak."""

@@ -262,8 +262,9 @@ def _doc_rows(rng):
 
 def _index_lifecycle_kinds():
     """kind -> (source rows, ensure(df, path, param), param, changed
-    param). The token index has no build parameter that enters its
-    fingerprint, so it has no changed-params case."""
+    param). The token index's only fingerprint params are its column
+    names, so its changed-params case lives in test_retrieval.py
+    (``test_token_index_rebuilds_when_text_col_changes``)."""
     from cdc_kafka_project_spark.operators import dedup as dd
     from cdc_kafka_project_spark.operators import retrieval as rt
 

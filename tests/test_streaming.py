@@ -358,3 +358,180 @@ def test_streaming_scd2_view_equals_batch_over_merged_log(spark, tmpdirs):
     assert len(alice) >= 2
     assert all(r.valid_to_ts is not None for r in alice[:-1])
     assert alice[-1].is_current and alice[-1].action == "delete"
+
+
+def test_streaming_replayed_batch_is_exactly_once(spark, tmpdirs):
+    """A crash after the sink wrote a micro-batch but before the
+    checkpoint committed it: the rerun replays that batch, and the file
+    sink, which has the batch id in its metadata log, appends nothing.
+    The DLQ keeps its 3 rows (an at-least-once append doubles them)."""
+    import os
+
+    src, work = tmpdirs
+    spark.createDataFrame(golden_rows(), EMP_CDC_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    _pipeline(spark, src, work).run_available_now()
+
+    commits = os.path.join(work, "checkpoint", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+
+    p = _pipeline(spark, src, work)
+    p.run_available_now()
+    assert sorted(r.emp_id for r in p.dlq().collect()) == [-100, 3, 4]
+    assert [r.emp_id for r in p.snapshot().collect()] == [2]
+    assert p.curated_log().count() == 4
+
+
+def _emp(emp_id, salary, action, minute, seq, dob=dt.date(2012, 1, 1)):
+    return (
+        emp_id, f"F{emp_id}", f"L{emp_id}", dob, "City", salary, action,
+        dt.datetime(2024, 1, 1, 12, minute, 0), seq,
+    )
+
+
+def _append(spark, src, rows):
+    spark.createDataFrame(rows, EMP_CDC_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_streaming_merge_on_read_equals_batch_twins(spark, tmpdirs):
+    """Five bursts, compacting after bursts 1 and 3 only: every view
+    over base + unfolded files equals its batch twin over the full raw
+    log, whether or not the last burst was folded."""
+    src, work = tmpdirs
+    bursts = [
+        # 6 inserts + one NULL-predicate row (salary NULL -> DLQ)
+        [_emp(i, 1000 + i, "insert", i, i) for i in range(1, 7)]
+        + [_emp(7, None, "insert", 7, 7)],
+        # 2 updates (+ an invalid one): 3 < base of 6, not folded
+        [_emp(1, 2000, "update", 10, 8), _emp(2, 2100, "UPDATE", 11, 9),
+         _emp(3, 50, "update", 12, 10)],
+        # 4 more rows: 3 + 4 >= 6, folded
+        [_emp(4, 1004, "delete", 13, 11), _emp(8, 1800, "insert", 14, 12),
+         _emp(1, 2200, "update", 15, 13), _emp(-5, 900, "insert", 16, 14)],
+        # a delete and a re-insert of a deleted key: not folded
+        [_emp(2, 2100, "delete", 17, 15), _emp(4, 1400, "insert", 18, 16)],
+        # a late update that predates the base row of key 1: not folded
+        [_emp(1, 9999, "update", 1, 17)],
+    ]
+    p = _pipeline(spark, src, work)
+    versions = []
+    for rows in bursts:
+        _append(spark, src, rows)
+        p.run_available_now()
+        versions.append(p._pointer()["version"])
+    assert versions == [1, 1, 2, 2, 2]
+
+    raw = spark.createDataFrame([r for b in bursts for r in b], EMP_CDC_SCHEMA)
+    valid, dlq = cdc.validate_split(raw, cdc.employee_invalid_predicate())
+    assert _rows(p.curated_log()) == _rows(valid)
+    assert _rows(p.dlq()) == _rows(dlq)
+    assert {r.emp_id for r in p.dlq().collect()} == {7, 3, -5}
+    assert _rows(p.snapshot()) == _rows(
+        cdc.apply_changes(valid, p.key_cols, p.order_cols)
+    )
+    assert _rows(p.scd2_view()) == _rows(
+        cdc.scd2_history(valid, p.key_cols, p.order_cols, "last_updated_at")
+    )
+    assert {r.emp_id: r.salary for r in p.snapshot().collect()} == {
+        1: 2200, 3: 1003, 4: 1400, 5: 1005, 6: 1006, 8: 1800,
+    }
+
+
+def test_streaming_late_event_and_delete_after_compaction(spark, tmpdirs):
+    """The base keeps each key's latest row, tombstones included: a late
+    event older than a key's base row loses to it, unfolded or folded,
+    and a late insert cannot resurrect a key whose base row is a
+    delete."""
+    import os
+
+    src, work = tmpdirs
+    p = _pipeline(spark, src, work)
+    _append(spark, src, [_emp(i, 1000 + i, "insert", 30, i) for i in range(10, 14)])
+    p.run_available_now()
+    ptr = p._pointer()
+    assert (ptr["version"], ptr["rows"]) == (1, 4)
+
+    # late update of key 10 (12:05 < its base row's 12:30); delete of 11
+    _append(spark, src, [_emp(10, 9999, "update", 5, 20), _emp(11, 1011, "delete", 40, 21)])
+    p.run_available_now()
+    assert p._pointer()["version"] == 1  # 2 < 4: read as delta
+    assert {r.emp_id: r.salary for r in p.snapshot().collect()} == {
+        10: 1010, 12: 1012, 13: 1013,
+    }
+
+    # late insert of the deleted key 11 (12:35 < the delete's 12:40)
+    _append(spark, src, [_emp(11, 7777, "insert", 35, 22), _emp(12, 1212, "update", 45, 23)])
+    p.run_available_now()
+    ptr = p._pointer()
+    assert ptr["version"] == 2 and ptr["rows"] == 4  # tombstone of 11 kept
+    assert sorted(os.listdir(os.path.join(work, "base"))) == ["2", "CURRENT"]
+    assert {r.emp_id: r.salary for r in p.snapshot().collect()} == {
+        10: 1010, 12: 1212, 13: 1013,
+    }
+
+
+def test_streaming_unpublished_base_leaves_snapshot_unchanged(
+    spark, tmpdirs, monkeypatch
+):
+    """A crash between writing base version n+1 and swapping the
+    pointer: the old base and every unfolded file are still what the
+    snapshot reads, so the answer is the same; the next compaction
+    overwrites the orphan version and deletes the superseded one."""
+    import os
+
+    src, work = tmpdirs
+    bursts = [
+        [_emp(i, 1000 + i, "insert", i, i) for i in range(1, 4)],
+        [_emp(1, 2001, "update", 10, 4), _emp(2, 1002, "delete", 11, 5),
+         _emp(4, 1004, "insert", 12, 6)],
+    ]
+    p = _pipeline(spark, src, work)
+    _append(spark, src, bursts[0])
+    p.run_available_now()
+
+    def crash(self, pointer):
+        raise RuntimeError("crash before the pointer swap")
+
+    with monkeypatch.context() as m:
+        m.setattr(CdcFileStreamPipeline, "_publish", crash)
+        _append(spark, src, bursts[1])
+        with pytest.raises(RuntimeError, match="pointer swap"):
+            p.run_available_now()
+    base = os.path.join(work, "base")
+    assert sorted(os.listdir(base)) == ["1", "2", "CURRENT"]
+    assert p._pointer()["version"] == 1
+
+    want = {1: 2001, 3: 1003, 4: 1004}
+    p2 = _pipeline(spark, src, work)
+    assert {r.emp_id: r.salary for r in p2.snapshot().collect()} == want
+
+    _append(spark, src, [_emp(5, 1005, "insert", 13, 7), _emp(6, 1006, "insert", 14, 8),
+                         _emp(7, 1007, "insert", 15, 9)])
+    p2.run_available_now()
+    assert p2._pointer()["version"] == 2
+    assert sorted(os.listdir(base)) == ["2", "CURRENT"]
+    assert {r.emp_id: r.salary for r in p2.snapshot().collect()} == {
+        **want, 5: 1005, 6: 1006, 7: 1007,
+    }
+
+
+def test_streaming_old_layout_work_dir_is_refused(spark, tmpdirs):
+    """A work dir written by the foreachBatch pipeline (curated/ + dlq/,
+    no log/) has a checkpoint for another sink: resuming it must fail
+    loudly, naming the dir, not replay into a second layout."""
+    import os
+
+    src, work = tmpdirs
+    os.makedirs(os.path.join(work, "curated"))
+    with pytest.raises(ValueError, match="old layout") as err:
+        _pipeline(spark, src, work)
+    assert work in str(err.value)

@@ -3,8 +3,9 @@
 
 tests/test_streaming_soak.py pins stream/batch parity for the stateful
 totals path at sf0.1; THIS tool soaks the full file-stream CDC pipeline
-(streaming/pipeline.CdcFileStreamPipeline — validate/DLQ split ->
-curated append-only log -> last-writer-wins replica view) over a
+(streaming/pipeline.CdcFileStreamPipeline — one file sink routing the
+curated append-only log and the DLQ -> last-writer-wins replica view,
+merge-on-read over a compacted base) over a
 replica-scale change-log in bounded availableNow bursts, with one
 process-restart simulation (a fresh pipeline object over the same
 checkpoint) halfway through, then asserts against the one-shot batch
@@ -83,8 +84,8 @@ def main() -> int:
             burst.write.mode("append").parquet(src)
             if b == n_bursts // 2:
                 # process-restart simulation: a FRESH pipeline object
-                # over the same checkpoint/curated/dlq dirs — all state
-                # must live in the checkpoint and the parquet logs, not
+                # over the same checkpoint/log/base dirs — all state
+                # must live in the checkpoint and the parquet files, not
                 # the Python object
                 pipe = make_pipeline()
             tb = time.time()
