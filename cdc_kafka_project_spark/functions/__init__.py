@@ -10,13 +10,13 @@ Two cross-cutting concerns live here:
   bit-identical to any other engine doing exact arithmetic (the DuckDB
   oracle), independent of parallelism.
 
-* **Vector math on array<float>** — two tiers with identical float64
-  semantics. ``cosine_sim`` is a JVM higher-order expression (fine for
-  one-off scoring, but HOF lambdas evaluate *interpreted*, ~ms per row
-  on wide vectors). ``cosine_pd`` is the hot-path tier: an
-  Arrow-batched pandas UDF whose dimension loop accumulates
-  left-to-right in IEEE float64 — bit-identical results to the JVM
-  fold, vectorized across rows (~1000x on pair joins).
+* **Vector math on array<float>** — ``cosine_pd`` is the one cosine:
+  an Arrow-batched pandas UDF whose dimension loop accumulates
+  left-to-right in IEEE float64, vectorized across rows. That left
+  fold is the order the DuckDB oracle's SUM takes over the unnested
+  vector in scan order, so the two agree bit for bit. (A JVM
+  higher-order expression would fold the same way but evaluates its
+  lambdas *interpreted*, ~ms per row on wide vectors.)
 """
 
 from __future__ import annotations
@@ -171,12 +171,6 @@ def discount_amount_dec() -> Column:
     return dec2("l_extendedprice") * F.col("l_discount").cast("decimal(4,2)")
 
 
-def lsum(col: Column | str) -> Column:
-    """Sum cast to long (bigint) — matches the oracle's CAST(... AS BIGINT)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c).cast("long")
-
-
 # ---------------------------------------------------------------------------
 # Vector expressions (array<float> embeddings)
 # ---------------------------------------------------------------------------
@@ -187,24 +181,8 @@ def to_double_array(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array<double> columns (sequential left fold —
-    same evaluation order on every engine, so float64 results agree)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine similarity in float64; inputs may be array<float>."""
-    ad, bd = to_double_array(a), to_double_array(b)
-    return dot(ad, bd) / (l2_norm(ad) * l2_norm(bd))
 
 
 # DataType instance, not a DDL string: string return types are parsed
@@ -223,10 +201,9 @@ def _cosine_pd(a, b):  # pd.Series[np.ndarray] x2 -> pd.Series[float]
     na = np.zeros(n)
     nb = np.zeros(n)
     # Sequential fold over dimensions, vectorized over rows: the
-    # accumulation order is exactly the JVM zip_with/aggregate left
-    # fold, so results are bit-identical to cosine_sim (and to any
-    # oracle summing in scan order) — parity is not at the mercy of
-    # BLAS blocking.
+    # accumulation order is the left fold an oracle's SUM over the
+    # unnested vector takes in scan order, so results are bit-identical
+    # to it — parity is not at the mercy of BLAS blocking.
     for j in range(A.shape[1]):
         x, y = A[:, j], B[:, j]
         dp = dp + x * y
@@ -236,9 +213,9 @@ def _cosine_pd(a, b):  # pd.Series[np.ndarray] x2 -> pd.Series[float]
 
 
 def cosine_pd(a: Column | str, b: Column | str) -> Column:
-    """Arrow-vectorized pairwise cosine — the hot-path twin of
-    ``cosine_sim`` (see module docstring). Use on candidate-pair joins
-    and corpus scans; numerically identical to the JVM expression."""
+    """Arrow-vectorized pairwise cosine in float64 — the engine's one
+    cosine (see module docstring); inputs may be array<float>. Its
+    left-fold order matches the DuckDB oracle's SUM in scan order."""
     ac = F.col(a) if isinstance(a, str) else a
     bc = F.col(b) if isinstance(b, str) else b
     return _cosine_pd(ac, bc)

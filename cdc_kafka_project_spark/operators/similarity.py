@@ -1,21 +1,28 @@
 """Similarity search over embedding columns (north-star extension).
 
 Embeddings are plain ``array<float>`` columns. Scoring uses the
-Arrow-vectorized ``functions.cosine_pd`` (bit-identical float64 to the
-JVM higher-order fold, ~1000x faster on wide candidate sets — HOF
-lambdas evaluate interpreted, ~5 ms/row at dim 64); bucket/assignment
-expressions that run once per row stay JVM-side where cheap.
+Arrow-vectorized ``functions.cosine_pd`` (float64 left fold in scan
+order, the DuckDB oracle's summation order; a JVM higher-order fold
+would evaluate its lambdas interpreted, ~5 ms/row at dim 64). Bucket,
+assignment and encoding kernels are Arrow-batched numpy as well.
 
-Two tiers:
+Tiers:
 
 * **brute force** — query-vs-all cosine + top-k. At 100 TB this is a
   single scan with a TakeOrderedAndProject (per-partition heaps), which
   is exactly how a distributed flat index behaves; still the recall=1.0
   baseline every ANN variant is judged against.
-* **LSH (random hyperplanes)** — sign-pattern bucketing. Probing only
-  matching (or near-matching) buckets turns query-vs-all into an
-  equi-join. An IVF variant (k-means coarse quantizer via pyspark.ml)
-  is the planned upgrade; the bucketing/probing plumbing is identical.
+* **materialized ANN indexes** — hyperplane LSH (sign-pattern buckets)
+  and IVF (k-means coarse quantizer), each written ``partitionBy`` its
+  bucket/list id so a probe is partition pruning, then exact rescore;
+  PQ codes scored by asymmetric distance.
+* **binary** — packed sign bits, Hamming shortlist, exact rerank.
+
+Each vector primitive has one kernel here: the exact-rescore top-k
+(``_exact_topk``), the training collect (``_training_matrix``),
+Lloyd's iterations (``_lloyd``), the nearest-centroid argmin
+(``_nearest``), the hyperplane sign bits (``_sign_bits``) and the
+block-pair cosine join (``_block_pairs_above``).
 """
 
 from __future__ import annotations
@@ -80,11 +87,26 @@ def brute_force_topk(
     TakeOrderedAndProject keeps k rows per partition — no shuffle of
     the corpus.
     """
+    return _exact_topk(spread(embeddings), query_vec, k, round_to)
+
+
+def _exact_topk(
+    cand: DataFrame,
+    query_vec: list[float],
+    k: int,
+    round_to: int | None,
+    *keep: str,
+) -> DataFrame:
+    """Exact-cosine top-k of the candidate rows (vec_id, embedding):
+    ``cosine_pd`` against the literal query, optionally ``fround``-ed,
+    ties broken by vec_id. Every tier ends here — brute force scores
+    the corpus, the ANN probes their candidate lists, the Hamming tier
+    its shortlist (``keep`` carries extra columns through)."""
     cos = cosine_pd(F.col("embedding"), _qcol(query_vec))
     if round_to is not None:
         cos = fround(cos, round_to)
     return (
-        spread(embeddings).select("vec_id", cos.alias("cos_sim"))
+        cand.select("vec_id", *keep, cos.alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(k)
     )
@@ -98,6 +120,19 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
         norm = math.sqrt(sum(x * x for x in v)) or 1.0
         planes.append([x / norm for x in v])
     return planes
+
+
+def _batch_matrix(e):
+    """One Arrow batch of embedding cells as an n x dim float64 matrix."""
+    import numpy as np
+
+    return np.stack(e.to_numpy()).astype(np.float64)
+
+
+def _sign_bits(e, P):
+    """n x n_planes sign pattern (x . p > 0) of one Arrow batch against
+    the hyperplane matrix ``P`` — one batched matmul."""
+    return (_batch_matrix(e) @ P.T) > 0
 
 
 def lsh_bucket_expr(col, planes: list[list[float]]):
@@ -118,48 +153,9 @@ def lsh_bucket_expr(col, planes: list[list[float]]):
 
         if len(e) == 0:
             return pd.Series([], dtype="int64")
-        X = np.stack(e.to_numpy()).astype(np.float64)
-        return pd.Series(((X @ P.T) > 0) @ weights)
+        return pd.Series(_sign_bits(e, P) @ weights)
 
     return bucket(col)
-
-
-def lsh_ann_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 20,
-    n_planes: int = 8,
-    probe_hamming: int = 1,
-    round_to: int | None = 4,
-) -> DataFrame:
-    """Approximate top-k: hyperplane-LSH bucket filter, then exact cosine.
-
-    Scans only rows whose bucket is within ``probe_hamming`` bit flips
-    of the query's bucket (multi-probe). With 8 planes + 1-bit probing
-    that's ~3.5% of the corpus in expectation — the 100 TB path, at the
-    cost of bounded recall loss (measured in tests against brute force).
-    """
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes)
-    qbits = 0
-    for i, p in enumerate(planes):
-        if sum(a * b for a, b in zip(query_vec, p)) > 0:
-            qbits |= 1 << i
-    probe = [qbits] + (
-        [qbits ^ (1 << i) for i in range(n_planes)] if probe_hamming >= 1 else []
-    )
-    bucketed = spread(embeddings).withColumn(
-        "__bucket", lsh_bucket_expr(F.col("embedding"), planes)
-    )
-    cand = bucketed.filter(F.col("__bucket").isin(probe))
-    cos = cosine_pd(F.col("embedding"), _qcol(query_vec))
-    if round_to is not None:
-        cos = fround(cos, round_to)
-    return (
-        cand.select("vec_id", cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -167,19 +163,28 @@ def lsh_ann_topk(
 # ---------------------------------------------------------------------------
 
 
-def _assign_expr(col, centroids: list[list[float]]):
-    """argmin centroid id per row — Arrow-vectorized nearest-centroid.
+def _nearest(X, C):
+    """Nearest row of ``C`` for every row of ``X``: one batched distance
+    matrix in the expanded form ||x||^2 - 2 x.C^T + ||c||^2 (small
+    temporaries, BLAS matmul); ties break to the lowest index (argmin
+    returns the first minimum). The one argmin behind k-means training,
+    IVF assignment and PQ encoding."""
+    d = (
+        (X * X).sum(axis=1)[:, None]
+        - 2.0 * (X @ C.T)
+        + (C * C).sum(axis=1)[None, :]
+    )
+    return d.argmin(axis=1)
 
-    One batched distance computation per partition via the expanded
-    form ||x||^2 - 2 x.C^T + ||c||^2 (small temporaries, BLAS matmul);
-    ties break to the lowest cid (argmin returns the first minimum).
-    The centroid matrix rides in the UDF closure — it is the model,
-    k x dim doubles, not data.
+
+def _assign_expr(col, centroids: list[list[float]]):
+    """argmin centroid id per row — Arrow-vectorized nearest-centroid
+    (``_nearest``). The centroid matrix rides in the UDF closure — it
+    is the model, k x dim doubles, not data.
     """
     import numpy as np
 
     C = np.asarray(centroids, dtype=np.float64)  # k x dim
-    c2 = (C * C).sum(axis=1)
 
     @F.pandas_udf("int")
     def assign(e):  # pd.Series[np.ndarray] -> pd.Series[int32]
@@ -187,9 +192,7 @@ def _assign_expr(col, centroids: list[list[float]]):
 
         if len(e) == 0:
             return pd.Series([], dtype="int32")
-        X = np.stack(e.to_numpy()).astype(np.float64)
-        d = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c2[None, :]
-        return pd.Series(d.argmin(axis=1).astype("int32"))
+        return pd.Series(_nearest(_batch_matrix(e), C).astype("int32"))
 
     return assign(col)
 
@@ -213,6 +216,31 @@ def training_sample(
     )
 
 
+def _training_matrix(embeddings: DataFrame, max_train: int):
+    """The bounded ``training_sample`` collected in vec_id order as an
+    n x dim float64 matrix — the one driver-side collect behind every
+    trainer (k-means, PQ, PCA)."""
+    import numpy as np
+
+    df = training_sample(embeddings.select("vec_id", "embedding"), max_train)
+    rows = df.orderBy("vec_id").collect()
+    return np.array([list(r.embedding) for r in rows], dtype=np.float64)
+
+
+def _lloyd(X, k: int, iters: int):
+    """Deterministic Lloyd's k-means over the rows of ``X``: init = the
+    first k rows (seedless), ``iters`` assign/update rounds, empty
+    clusters keep their previous centroid. Returns a k x dim array."""
+    C = X[:k].copy()
+    for _ in range(iters):
+        cid = _nearest(X, C)
+        for i in range(k):
+            members = X[cid == i]
+            if len(members):
+                C[i] = members.mean(axis=0)
+    return C
+
+
 def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 16,
@@ -234,13 +262,9 @@ def kmeans_centroids(
     correct, but ~10 cluster jobs to fit a model that fits in L2 cache.
 
     Init = the first k sampled vectors by vec_id (seedless); empty
-    clusters keep their previous centroid.
+    clusters keep their previous centroid (``_lloyd``).
     """
-    import numpy as np
-
-    df = training_sample(embeddings.select("vec_id", "embedding"), max_train)
-    rows = df.orderBy("vec_id").collect()
-    X = np.array([list(r.embedding) for r in rows], dtype=np.float64)
+    X = _training_matrix(embeddings, max_train)
     if len(X) < k:
         # X[:k] would silently train fewer centroids than requested,
         # breaking the caller's cid-space assumption downstream.
@@ -248,16 +272,7 @@ def kmeans_centroids(
             f"kmeans_centroids: training sample has {len(X)} rows < k={k}; "
             "lower k or raise max_train"
         )
-    C = X[:k].copy()
-    x2 = (X * X).sum(axis=1)[:, None]
-    for _ in range(iters):
-        d = x2 - 2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
-        cid = d.argmin(axis=1)
-        for i in range(k):
-            members = X[cid == i]
-            if len(members):
-                C[i] = members.mean(axis=0)
-    return C.tolist()
+    return _lloyd(X, k, iters).tolist()
 
 
 def ensure_kmeans_model(
@@ -292,52 +307,20 @@ def ivf_index(embeddings: DataFrame, centroids: list[list[float]]) -> DataFrame:
     )
 
 
-def ivf_ann_topk(
-    index: DataFrame,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 20,
-    nprobe: int = 4,
-    round_to: int | None = 4,
-) -> DataFrame:
-    """IVF search: rank centroids by distance to the query (driver-side,
-    k tiny), scan only the ``nprobe`` nearest inverted lists, exact
-    cosine + top-k over the candidates.
-
-    The list filter is a plain predicate on cid — with a
-    cid-partitioned index that is partition pruning, i.e. the scan cost
-    is |probed lists|, independent of corpus size.
-    """
-    by_dist = sorted(
-        range(len(centroids)),
-        key=lambda i: sum(
-            (a - b) * (a - b) for a, b in zip(query_vec, centroids[i])
-        ),
-    )
-    probe = by_dist[:nprobe]
-    cos = cosine_pd(F.col("embedding"), _qcol(query_vec))
-    if round_to is not None:
-        cos = fround(cos, round_to)
-    return (
-        index.filter(F.col("cid").isin(probe))
-        .select("vec_id", cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Materialized, partition-pruned ANN indexes
 # ---------------------------------------------------------------------------
 #
-# The query-time formulations above (lsh_ann_topk / ivf_ann_topk over an
-# in-plan assignment) recompute bucket ids over the full corpus per
-# query — a filter after a 100% scan. The production path materializes
-# the index ONCE, written ``partitionBy`` the bucket/list id, so a probe
-# is *partition pruning*: the scan plans only the matching directories
-# and its cost is |probed lists|, independent of corpus size. The model
-# (hyperplanes / centroids) persists next to the data as JSON — a few
-# KB; on a real cluster this lands on the same shared store (S3/HDFS).
+# Every ANN query probes an index materialized ONCE, written
+# ``partitionBy`` the bucket/list id, so a probe is *partition
+# pruning*: the scan plans only the matching directories and its cost
+# is |probed lists|, independent of corpus size — never a bucket
+# assignment recomputed over the full corpus per query. Each index
+# kind's probe rule (which buckets / lists to read) lives in its one
+# ``probe_*_index``; the candidates then go through ``_exact_topk``.
+# The model (hyperplanes / centroids) persists next to the data as
+# JSON — a few KB; on a real cluster this lands on the same shared
+# store (S3/HDFS).
 
 
 def _model_path(path: str) -> str:
@@ -542,14 +525,7 @@ def probe_lsh_index(
         else []
     )
     cand = pruned_partition_read(spark, path, "__bucket", probe)
-    cos = cosine_pd(F.col("embedding"), _qcol(query_vec))
-    if round_to is not None:
-        cos = fround(cos, round_to)
-    return (
-        cand.select("vec_id", cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
-    )
+    return _exact_topk(cand, query_vec, k, round_to)
 
 
 def ensure_ivf_index(
@@ -638,14 +614,7 @@ def probe_ivf_index(
     )
     probe = by_dist[:nprobe]
     cand = pruned_partition_read(spark, path, "cid", probe)
-    cos = cosine_pd(F.col("embedding"), _qcol(query_vec))
-    if round_to is not None:
-        cos = fround(cos, round_to)
-    return (
-        cand.select("vec_id", cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
-    )
+    return _exact_topk(cand, query_vec, k, round_to)
 
 
 def _pair_score_fn(pre: float):
@@ -655,9 +624,9 @@ def _pair_score_fn(pre: float):
     dimension order, i.e. bit-identical to the sequential fold
     (functions.cosine_pd / the oracle's unnest-SUM). Same-block rows
     (lblk == __rblk) mask to the strict upper triangle; cross-block
-    rows emit every pair once as (min_id, max_id). Shared by the
-    global block-pair tier (all_pairs_cosine_above) and the
-    cluster-scoped SemDeDup tier (semdedup_pairs)."""
+    rows emit every pair once as (min_id, max_id). Run by
+    ``_block_pairs_above`` for the global tier (all_pairs_cosine_above)
+    and the cluster-scoped SemDeDup tier (semdedup_pairs)."""
 
     def fn(batches):
         import numpy as np
@@ -701,6 +670,54 @@ def _pair_score_fn(pre: float):
     return fn
 
 
+def _pack_blocks(df: DataFrame, keys: list[str], B: int) -> DataFrame:
+    """One row per (``keys``, hash block of B): the block's vec_ids and
+    embeddings as two arrays — the block-pair join's payload."""
+    return (
+        df.withColumn("__blk", F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int"))
+        .groupBy(*keys, "__blk")
+        .agg(
+            F.collect_list("vec_id").alias("ids"),
+            F.collect_list("embedding").alias("embs"),
+        )
+    )
+
+
+def _block_pairs_above(
+    packed: DataFrame,
+    keys: list[str],
+    B: int,
+    threshold: float,
+    round_to: int,
+) -> DataFrame:
+    """(vec_a, vec_b, cos_sim >= threshold) over ``_pack_blocks`` rows:
+    block L meets blocks L..B-1 with equal ``keys`` through an
+    equi-join on the exploded target id, and ``_pair_score_fn`` scores
+    each joined pair of blocks. The kernel pre-filters with a margin
+    below the rounded threshold; the authoritative ``fround`` + filter
+    happens JVM-side."""
+    pre = threshold - 10.0 ** (-round_to)  # margin > any rounding shift
+    left = packed.select(
+        *keys,
+        F.col("__blk").alias("lblk"),
+        F.col("ids").alias("lids"),
+        F.col("embs").alias("lembs"),
+        F.explode(F.sequence(F.col("__blk"), F.lit(B - 1))).alias("__rblk"),
+    )
+    right = packed.select(
+        *keys,
+        F.col("__blk").alias("__rblk"),
+        F.col("ids").alias("rids"),
+        F.col("embs").alias("rembs"),
+    )
+    out = left.join(right, [*keys, "__rblk"]).mapInPandas(
+        _pair_score_fn(pre), "vec_a long, vec_b long, raw_cos double"
+    )
+    return out.select(
+        "vec_a", "vec_b", fround(F.col("raw_cos"), round_to).alias("cos_sim")
+    ).filter(F.col("cos_sim") >= threshold)
+
+
 def all_pairs_cosine_above(
     embeddings: DataFrame,
     threshold: float,
@@ -717,61 +734,21 @@ def all_pairs_cosine_above(
     explodes block id L into target ids L..B-1, so the block-pair
     enumeration (L <= R, upper triangle) is a plain **equi-join** on
     the target id — shuffle-partitionable, no broadcast, no cartesian,
-    no driver materialization. One Arrow kernel per joined row scores
-    |L| x |R| pairs as 'dim' outer-product accumulation steps —
-    vectorized over the pair plane but accumulating in
-    ascending-dimension order, i.e. bit-identical to the sequential
-    fold (functions.cosine_pd / the oracle's unnest-SUM). Same-block
-    rows mask to the strict upper triangle; cross-block rows emit every
-    pair once as (min_id, max_id).
+    no driver materialization (``_block_pairs_above``). One Arrow
+    kernel per joined row scores |L| x |R| pairs (``_pair_score_fn``).
 
     O(n^2) total work is inherent to the exact verify tier — at scale
     this runs on LSH candidate blocks, not the raw corpus — but memory
     is bounded per task: two ~``block_rows`` x dim panels plus one
     |L| x |R| float64 score tile (~8 MB at the 1024 default).
-
-    The kernel pre-filters with a conservative margin below the rounded
-    threshold; the authoritative F.round + filter happens JVM-side so
-    rounding semantics stay identical to every other query.
     """
     if n_blocks is None:
         n = embeddings.count()  # O(1) result; parquet metadata count
         n_blocks = max(1, -(-n // block_rows))
-    B = n_blocks
-    pre = threshold - 10.0 ** (-round_to)  # margin > any rounding shift
-
-    packed = (
-        spread(embeddings.select("vec_id", "embedding"))
-        .withColumn("__blk", F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int"))
-        .groupBy("__blk")
-        .agg(
-            F.collect_list("vec_id").alias("ids"),
-            F.collect_list("embedding").alias("embs"),
-        )
+    packed = _pack_blocks(
+        spread(embeddings.select("vec_id", "embedding")), [], n_blocks
     )
-    left = packed.select(
-        F.col("__blk").alias("lblk"),
-        F.col("ids").alias("lids"),
-        F.col("embs").alias("lembs"),
-        F.explode(
-            F.sequence(F.col("__blk"), F.lit(B - 1))
-        ).alias("__rblk"),
-    )
-    right = packed.select(
-        F.col("__blk").alias("__rblk"),
-        F.col("ids").alias("rids"),
-        F.col("embs").alias("rembs"),
-    )
-    joined = left.join(right, "__rblk")
-    out = joined.mapInPandas(
-        _pair_score_fn(pre), "vec_a long, vec_b long, raw_cos double"
-    )
-    return (
-        out.select(
-            "vec_a", "vec_b", fround(F.col("raw_cos"), round_to).alias("cos_sim")
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    return _block_pairs_above(packed, [], n_blocks, threshold, round_to)
 
 
 def semdedup_k_for(
@@ -837,45 +814,11 @@ def semdedup_pairs(
     # mega-cluster degrades toward the global tier's block count, never
     # a single task
     B = max(1, -(-n // (block_rows * max(k, 1))))
-    pre = threshold - 10.0 ** (-round_to)
     # the packed block table feeds BOTH sides of the block-pair join —
     # checkpoint it so the corpus is scanned/assigned once, not once
     # per join side (r11; the blocks are the shuffle payload anyway)
-    packed = cache.scoped_localcheckpoint(
-        idx.withColumn(
-            "__blk", F.pmod(F.xxhash64("vec_id"), F.lit(B)).cast("int")
-        )
-        .groupBy("cid", "__blk")
-        .agg(
-            F.collect_list("vec_id").alias("ids"),
-            F.collect_list("embedding").alias("embs"),
-        )
-    )
-    left = packed.select(
-        "cid",
-        F.col("__blk").alias("lblk"),
-        F.col("ids").alias("lids"),
-        F.col("embs").alias("lembs"),
-        F.explode(F.sequence(F.col("__blk"), F.lit(B - 1))).alias("__rblk"),
-    )
-    right = packed.select(
-        "cid",
-        F.col("__blk").alias("__rblk"),
-        F.col("ids").alias("rids"),
-        F.col("embs").alias("rembs"),
-    )
-    joined = left.join(right, ["cid", "__rblk"])
-    out = joined.mapInPandas(
-        _pair_score_fn(pre), "vec_a long, vec_b long, raw_cos double"
-    )
-    return (
-        out.select(
-            "vec_a",
-            "vec_b",
-            fround(F.col("raw_cos"), round_to).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    packed = cache.scoped_localcheckpoint(_pack_blocks(idx, ["cid"], B))
+    return _block_pairs_above(packed, ["cid"], B, threshold, round_to)
 
 
 def quantize_int8_stats(embeddings: DataFrame) -> DataFrame:
@@ -949,9 +892,8 @@ def band_bucket_expr(
 
         if len(e) == 0:
             return pd.Series([], dtype="object")
-        X = np.stack(e.to_numpy()).astype(np.float64)
-        bits = (X @ P.T) > 0  # n x (bands*r)
-        per_band = bits.reshape(len(X), bands, r) @ weights  # n x bands
+        bits = _sign_bits(e, P)  # n x (bands*r)
+        per_band = bits.reshape(len(e), bands, r) @ weights  # n x bands
         return pd.Series(list(per_band.astype(np.int64)))
 
     return buckets(col)
@@ -1050,11 +992,7 @@ def pq_train(
     Returns ``m`` codebooks, each ``k_codes x (dim // m)``. dim must be
     divisible by m.
     """
-    import numpy as np
-
-    df = training_sample(embeddings.select("vec_id", "embedding"), max_train)
-    rows = df.orderBy("vec_id").collect()
-    X = np.array([list(r.embedding) for r in rows], dtype=np.float64)
+    X = _training_matrix(embeddings, max_train)
     if len(X) < k_codes:
         # S[:k_codes] would silently yield under-sized codebooks.
         raise ValueError(
@@ -1065,20 +1003,10 @@ def pq_train(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        S = X[:, j * sub : (j + 1) * sub]
-        C = S[:k_codes].copy()
-        s2 = (S * S).sum(axis=1)[:, None]
-        for _ in range(iters):
-            d = s2 - 2.0 * (S @ C.T) + (C * C).sum(axis=1)[None, :]
-            cid = d.argmin(axis=1)
-            for i in range(k_codes):
-                members = S[cid == i]
-                if len(members):
-                    C[i] = members.mean(axis=0)
-        books.append(C.tolist())
-    return books
+    return [
+        _lloyd(X[:, j * sub : (j + 1) * sub], k_codes, iters).tolist()
+        for j in range(m)
+    ]
 
 
 def pq_code_expr(col, codebooks: list[list[list[float]]]):
@@ -1097,16 +1025,10 @@ def pq_code_expr(col, codebooks: list[list[list[float]]]):
 
         if len(e) == 0:
             return pd.Series([], dtype="object")
-        X = np.stack(e.to_numpy()).astype(np.float64)
+        X = _batch_matrix(e)
         codes = np.empty((X.shape[0], len(B)), dtype=np.int32)
         for j, C in enumerate(B):
-            S = X[:, j * sub : (j + 1) * sub]
-            d = (
-                (S * S).sum(axis=1)[:, None]
-                - 2.0 * (S @ C.T)
-                + (C * C).sum(axis=1)[None, :]
-            )
-            codes[:, j] = d.argmin(axis=1)
+            codes[:, j] = _nearest(X[:, j * sub : (j + 1) * sub], C)
         return pd.Series(list(codes))
 
     return enc(col)
@@ -1267,9 +1189,7 @@ def pca_train(
     """
     import numpy as np
 
-    df = training_sample(embeddings.select("vec_id", "embedding"), max_train)
-    rows = df.orderBy("vec_id").collect()
-    X = np.array([list(r.embedding) for r in rows], dtype=np.float64)
+    X = _training_matrix(embeddings, max_train)
     if len(X) < 2:
         raise ValueError("pca_train: need at least 2 training rows")
     k = min(n_components, X.shape[1])
@@ -1309,8 +1229,7 @@ def pca_project(
 
         if len(e) == 0:
             return pd.Series([], dtype="object")
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in e])
-        Y = (X - mean) @ comps.T
+        Y = (_batch_matrix(e) - mean) @ comps.T
         return pd.Series(list(Y))
 
     return embeddings.withColumn(out_col, proj(F.col("embedding")))
@@ -1407,14 +1326,7 @@ def hamming_rerank_topk(
         .orderBy("hamming", "vec_id")
         .limit(n_candidates)
     )
-    cos = cosine_pd(F.col("embedding"), _qcol(query_vec))
-    if round_to is not None:
-        cos = fround(cos, round_to)
-    return (
-        cand.select("vec_id", "hamming", cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
-    )
+    return _exact_topk(cand, query_vec, k, round_to, "hamming")
 
 
 def quantize_int8_stats_arrow(embeddings: DataFrame) -> DataFrame:

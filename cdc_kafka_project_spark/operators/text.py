@@ -287,34 +287,6 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def hash_split(
-    df: DataFrame,
-    key_col: str,
-    weights: dict[str, int],
-    salt: str = "split",
-) -> DataFrame:
-    """Deterministic dataset split (train/val/test) by key hash.
-
-    Each key lands in exactly one split, decided by
-    xxhash64(salt, key) mod total_weight — stable across runs, machines
-    and partitionings (no RNG, no sampleBy seed drift), and any later
-    re-run assigns new data without moving old data between splits: the
-    property a training pipeline needs so examples never leak from
-    train to test between snapshots. Adds a ``split`` column.
-    """
-    total = sum(weights.values())
-    bucket = F.pmod(F.xxhash64(F.lit(salt), F.col(key_col)), F.lit(total))
-    edges: list[tuple[str, int]] = []
-    acc = 0
-    for name, w in weights.items():
-        acc += w
-        edges.append((name, acc))
-    expr = F.lit(edges[-1][0])
-    for name, hi in reversed(edges[:-1]):
-        expr = F.when(bucket < hi, F.lit(name)).otherwise(expr)
-    return df.withColumn("split", expr)
-
-
 def pack_sequences(
     df: DataFrame,
     budget: int,
@@ -604,12 +576,15 @@ def hash_split_portable(
     weights: dict[str, int],
     salt: str = "split",
 ) -> DataFrame:
-    """``hash_split`` twin whose assignment is reproducible OUTSIDE the
-    engine (md5 is standardized; xxhash64's seed/spec is Spark-side):
+    """Deterministic dataset split (train/val/test) by key hash,
+    reproducible OUTSIDE the engine (md5 is standardized):
     bucket = first 4 hex chars of md5(salt || key), compared against
-    cumulative-weight edges in the 16^4 hex space. Same guarantees —
-    one split per key, stable under growth, no RNG — plus any system
-    with an md5() can audit the assignment (DuckDB oracle does).
+    cumulative-weight edges in the 16^4 hex space. Each key lands in
+    exactly one split, stable across runs, machines and partitionings
+    (no RNG), and re-running on grown data never moves old keys between
+    splits — examples never leak from train to test between snapshots.
+    Any system with an md5() can audit the assignment (DuckDB oracle
+    does).
 
     Adds a ``split`` column; key is cast to string before hashing, so
     use a canonical key representation.

@@ -865,10 +865,11 @@ def doc_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified 80/10/10 split with EXACT per-stratum proportions
     (floor boundaries), strata = language: a salted-md5 rank inside
     each language assigns splits deterministically — unlike the
-    expected-proportion hash_split, every language lands exactly
-    floor(n*0.8)/floor(n*0.9) cut points, so low-resource languages
-    cannot be starved of eval docs by hash luck. One rank window per
-    stratum; seed-free and reproducible on any md5-capable engine."""
+    expected-proportion hash_split_portable, every language lands
+    exactly floor(n*0.8)/floor(n*0.9) cut points, so low-resource
+    languages cannot be starved of eval docs by hash luck. One rank
+    window per stratum; seed-free and reproducible on any md5-capable
+    engine."""
     from pyspark.sql import Window
 
     docs = _docs(spark, sf_dir)

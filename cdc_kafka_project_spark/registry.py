@@ -106,67 +106,26 @@ def load_all() -> None:
 # Every name stays present regardless — this is a permutation, not a
 # filter; names not listed here sort after the listed ones.
 _GATE_PRIORITY: list[str] = [
-    # -- ROUND-16 WINDOW (standing rotation; computed by
-    #    tools/plan_gate_rotation.py --changed <the 14 r16-plan-
-    #    changed names — EVERY name whose registered plan or
-    #    operator internals changed this round, per the r15
-    #    advice that the changed set must be complete>.
-    #    Tier 1: the 14 changed names front the window; then
-    #    oracle-backed names by staleness (oldest newest-driver-
+    # -- ROUND-17 WINDOW (standing rotation; computed by
+    #    tools/plan_gate_rotation.py --changed <the 11 names that
+    #    reach an operator edited this round: the similarity kernels
+    #    shared in operators/similarity.py — exact-rescore top-k,
+    #    training collect, Lloyd, nearest-centroid argmin, sign bits,
+    #    block-pair cosine join>. Their plans are unchanged; they
+    #    front the window because their operator internals changed.
+    #    Then oracle-backed names by staleness (oldest newest-driver-
     #    row first, alphabetical within a round). --
-    "asof_join_cogrouped",  # changed-this-round (r15)
-    "theilsen_revenue_slope",  # changed-this-round (r15)
-    "text_index_topk",  # changed-this-round (r14)
-    "dedup_minhash_index_probe",  # changed-this-round (r11)
-    "similarity_ann_lsh",  # changed-this-round (r13)
-    "similarity_ann_ivf",  # changed-this-round (r13)
-    "similarity_ann_recall",  # changed-this-round (r14)
-    "embedding_index_pipeline",  # changed-this-round (r14)
-    "ivm_join_delta_revenue",  # changed-this-round (r15)
-    "grouping_sets_sql",  # changed-this-round (r13)
-    "doc_nb_quality_score",  # changed-this-round (r14)
-    "range_join_price_bands",  # changed-this-round (r13)
-    "bpe_merge_ranks",  # changed-this-round (r15)
-    "doc_bpe_token_counts",  # changed-this-round (r15)
-    "cdc_validate_dlq",  # r11
-    "cohort_ltv_curve",  # r11
-    "conversion_curve",  # r11
-    "curation_funnel_report",  # r11
-    "curation_pipeline",  # r11
-    "event_value_psi_drift",  # r11
-    "funnel_view_click_purchase",  # r11
-    "lang_temperature_sample",  # r11
-    "price_qty_regression",  # r11
-    "purchase_click_attribution",  # r11
-    "purchase_rate_wilson_ci",  # r11
-    "q21_waiting_suppliers",  # r11
-    "revenue_gini_by_segment",  # r11
-    "revenue_seasonality_decomp",  # r11
-    "rolling_median_revenue",  # r11
-    "semantic_decontaminate",  # r11
-    "similarity_semdedup_keep",  # r11
-    "sketch_incremental_distinct",  # r11
-    "sketch_user_overlap",  # r11
-    "source_distinctive_terms",  # r11
-    "source_token_quota_sample",  # r11
-    "supplier_hhi_by_nation",  # r11
-    "text_tfidf_top_terms",  # r11
-    "user_growth_accounting",  # r11
-    "vocab_growth_curve",  # r11
-    "weekend_effect_ttest",  # r11
-    "zipf_slope",  # r11
-    "anti_join_no_big_orders",  # r12
-    "cdc_incremental_agg",  # r12
-    "cdc_scd2_history",  # r12
-    "cdc_time_travel",  # r12
-    "cdc_validate_valid",  # r12
-    "conditional_aggs",  # r12
-    "corpus_source_report",  # r12
-    "cube_agg",  # r12
-    "date_exprs",  # r12
-    # -- BEHIND THE ROTATION, by staleness (oldest driver row
-    #    first, alphabetical within a round); no-oracle names
-    #    sort after every oracle-backed name (pinned rule 3). --
+    "similarity_topk",  # changed-this-round (r13)
+    "similarity_ann_lsh",  # changed-this-round (r16)
+    "similarity_ann_ivf",  # changed-this-round (r16)
+    "similarity_ann_pq",  # changed-this-round (r13)
+    "similarity_ann_recall",  # changed-this-round (r16)
+    "similarity_near_dup",  # changed-this-round (r15)
+    "similarity_semdedup_keep",  # changed-this-round (r16)
+    "similarity_hamming_rerank",  # changed-this-round (r12)
+    "embedding_pca_project",  # changed-this-round (r14)
+    "embedding_index_pipeline",  # changed-this-round (r16)
+    "similarity_pairs_above",  # changed-this-round (r14)
     "dedup_incremental_new_docs",  # r12
     "dedup_minhash_lsh",  # r12
     "denormalized_order_lines",  # r12
@@ -201,12 +160,14 @@ _GATE_PRIORITY: list[str] = [
     "rolling_7d_user_spend",  # r12
     "session_window_native",  # r12
     "shard_assignment_by_bytes",  # r12
-    "similarity_hamming_rerank",  # r12
     "split_leakage_audit",  # r12
     "unpivot_lineitem_measures",  # r12
     "winsorized_price_stats",  # r12
     "asof_join_next_purchase",  # r13
     "asof_join_purchases",  # r13
+    # -- BEHIND THE ROTATION, by staleness (oldest driver row
+    #    first, alphabetical within a round); no-oracle names
+    #    sort after every oracle-backed name (pinned rule 3). --
     "column_profile",  # r13
     "corr_lineitem_measures",  # r13
     "dedup_exact_groups",  # r13
@@ -240,8 +201,6 @@ _GATE_PRIORITY: list[str] = [
     "set_except_keys",  # r13
     "set_intersect_keys",  # r13
     "set_union_active_keys",  # r13
-    "similarity_ann_pq",  # r13
-    "similarity_topk",  # r13
     "string_funcs",  # r13
     "token_frequency_top100",  # r13
     "topk_orders",  # r13
@@ -280,7 +239,6 @@ _GATE_PRIORITY: list[str] = [
     "doc_winnow_fingerprints",  # r14
     "embedding_label_centroids",  # r14
     "embedding_norms",  # r14
-    "embedding_pca_project",  # r14
     "event_value_anomalies",  # r14
     "group_minmax_norm",  # r14
     "heavy_hitter_tokens",  # r14
@@ -289,7 +247,6 @@ _GATE_PRIORITY: list[str] = [
     "media_decode_features",  # r14
     "media_frame_sample",  # r14
     "media_resize",  # r14
-    "similarity_pairs_above",  # r14
     "skewed_salted_segment_revenue",  # r14
     "asof_last_purchase",  # r15
     "bm25_topk",  # r15
@@ -326,7 +283,6 @@ _GATE_PRIORITY: list[str] = [
     "salted_join_segment_revenue",  # r15
     "session_stats",  # r15
     "sessionize",  # r15
-    "similarity_near_dup",  # r15
     "sketch_distinct_users",  # r15
     "sketch_percentiles",  # r15
     "source_quota_sample",  # r15
@@ -336,6 +292,51 @@ _GATE_PRIORITY: list[str] = [
     "user_spend_ewma",  # r15
     "weekly_retention_cohorts",  # r15
     "weekly_revenue_wow",  # r15
+    "anti_join_no_big_orders",  # r16
+    "asof_join_cogrouped",  # r16
+    "bpe_merge_ranks",  # r16
+    "cdc_incremental_agg",  # r16
+    "cdc_scd2_history",  # r16
+    "cdc_time_travel",  # r16
+    "cdc_validate_dlq",  # r16
+    "cdc_validate_valid",  # r16
+    "cohort_ltv_curve",  # r16
+    "conditional_aggs",  # r16
+    "conversion_curve",  # r16
+    "corpus_source_report",  # r16
+    "cube_agg",  # r16
+    "curation_funnel_report",  # r16
+    "curation_pipeline",  # r16
+    "date_exprs",  # r16
+    "dedup_minhash_index_probe",  # r16
+    "doc_bpe_token_counts",  # r16
+    "doc_nb_quality_score",  # r16
+    "event_value_psi_drift",  # r16
+    "funnel_view_click_purchase",  # r16
+    "grouping_sets_sql",  # r16
+    "ivm_join_delta_revenue",  # r16
+    "lang_temperature_sample",  # r16
+    "price_qty_regression",  # r16
+    "purchase_click_attribution",  # r16
+    "purchase_rate_wilson_ci",  # r16
+    "q21_waiting_suppliers",  # r16
+    "range_join_price_bands",  # r16
+    "revenue_gini_by_segment",  # r16
+    "revenue_seasonality_decomp",  # r16
+    "rolling_median_revenue",  # r16
+    "semantic_decontaminate",  # r16
+    "sketch_incremental_distinct",  # r16
+    "sketch_user_overlap",  # r16
+    "source_distinctive_terms",  # r16
+    "source_token_quota_sample",  # r16
+    "supplier_hhi_by_nation",  # r16
+    "text_index_topk",  # r16
+    "text_tfidf_top_terms",  # r16
+    "theilsen_revenue_slope",  # r16
+    "user_growth_accounting",  # r16
+    "vocab_growth_curve",  # r16
+    "weekend_effect_ttest",  # r16
+    "zipf_slope",  # r16
 ]
 
 

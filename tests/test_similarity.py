@@ -68,23 +68,30 @@ def test_query_vector_lookup(corpus):
         sim.query_vector(emb, 99999)
 
 
-def test_ann_lsh_recall_on_clustered_neighbors(corpus):
+def test_ann_lsh_recall_on_clustered_neighbors(corpus, tmp_path):
     """Tight cluster around the query: LSH with multi-probe must find
     most of the true top-11 (the 10 perturbed copies + query)."""
     emb, q = corpus
+    path = str(tmp_path / "lsh")
+    sim.ensure_lsh_index(emb, path, n_planes=8)
     truth = {r.vec_id for r in sim.brute_force_topk(emb, q, k=11).collect()}
-    ann = {r.vec_id for r in sim.lsh_ann_topk(emb, q, k=11, n_planes=8).collect()}
+    ann = {
+        r.vec_id
+        for r in sim.probe_lsh_index(emb.sparkSession, path, q, k=11).collect()
+    }
     recall = len(truth & ann) / len(truth)
     assert 0 in ann  # the query's own bucket is always probed
     assert recall >= 0.6, f"recall {recall} too low for a tight cluster"
 
 
-def test_ann_results_subset_of_brute_force_ranking(corpus):
+def test_ann_results_subset_of_brute_force_ranking(corpus, tmp_path):
     """ANN scores must be exact cosines (only the candidate set is
     approximate)."""
     emb, q = corpus
+    path = str(tmp_path / "lsh")
+    sim.ensure_lsh_index(emb, path)
     brute = {r.vec_id: r.cos_sim for r in sim.brute_force_topk(emb, q, k=250).collect()}
-    for r in sim.lsh_ann_topk(emb, q, k=11).collect():
+    for r in sim.probe_lsh_index(emb.sparkSession, path, q, k=11).collect():
         assert r.cos_sim == pytest.approx(brute[r.vec_id], abs=1e-9)
 
 
@@ -127,30 +134,37 @@ def test_embedding_norms_unit_vectors(corpus):
     assert all(r.dim == DIM for r in out)
     assert all(abs(r.l2_norm - 1.0) < 1e-3 for r in out)
 
-def test_ivf_full_probe_equals_brute_force(corpus):
+def test_ivf_full_probe_equals_brute_force(corpus, tmp_path):
     """nprobe = k_centroids scans every inverted list — recall 1.0 by
     construction (partition of the corpus)."""
     emb, q = corpus
-    cents = sim.kmeans_centroids(emb, k=8, iters=2)
-    index = sim.ivf_index(emb, cents)
+    path = str(tmp_path / "ivf")
+    sim.ensure_ivf_index(emb, path, k_centroids=8, iters=2)
     truth = [r.vec_id for r in sim.brute_force_topk(emb, q, k=11).collect()]
-    full = [r.vec_id for r in sim.ivf_ann_topk(index, cents, q, k=11, nprobe=8).collect()]
+    full = [
+        r.vec_id
+        for r in sim.probe_ivf_index(
+            emb.sparkSession, path, q, k=11, nprobe=8
+        ).collect()
+    ]
     assert full == truth
 
 
-def test_ivf_probed_recall_on_clustered_neighbors(corpus):
+def test_ivf_probed_recall_on_clustered_neighbors(corpus, tmp_path):
     """The query's tight cluster lands in few lists: probing 2 of 8
     must recover most of the true top-11."""
     emb, q = corpus
-    cents = sim.kmeans_centroids(emb, k=8, iters=3)
-    index = sim.ivf_index(emb, cents)
+    path = str(tmp_path / "ivf")
+    sim.ensure_ivf_index(emb, path, k_centroids=8, iters=3)
     truth = {r.vec_id for r in sim.brute_force_topk(emb, q, k=11).collect()}
-    ann = {r.vec_id for r in sim.ivf_ann_topk(index, cents, q, k=11, nprobe=2).collect()}
-    recall = len(truth & ann) / len(truth)
+    got = sim.probe_ivf_index(
+        emb.sparkSession, path, q, k=11, nprobe=2
+    ).collect()
+    recall = len(truth & {r.vec_id for r in got}) / len(truth)
     assert recall >= 0.6, f"recall {recall} too low"
     # scores are exact cosines (candidate set is the only approximation)
     brute = {r.vec_id: r.cos_sim for r in sim.brute_force_topk(emb, q, k=250).collect()}
-    for r in sim.ivf_ann_topk(index, cents, q, k=11, nprobe=2).collect():
+    for r in got:
         assert r.cos_sim == pytest.approx(brute[r.vec_id], abs=1e-9)
 
 
@@ -174,22 +188,6 @@ def test_quantize_int8_reconstruction_bound(corpus):
         assert r.n_nonzero == sum(1 for c in codes if c != 0)
         # unit vectors: the absmax dimension quantizes to +/-127
         assert max(abs(r.code_min), abs(r.code_max)) == 127
-
-
-def test_lsh_index_probe_matches_query_time_formulation(corpus, tmp_path):
-    """The materialized LSH index must return exactly what the
-    query-time formulation returns (same planes seed, same probing) —
-    materialization changes the plan, never the answer."""
-    emb, q = corpus
-    path = str(tmp_path / "lsh")
-    sim.ensure_lsh_index(emb, path, n_planes=8)
-    assert sim.index_exists(path)
-    spark = emb.sparkSession
-    got = sim.probe_lsh_index(spark, path, q, k=11, probe_hamming=1).collect()
-    want = sim.lsh_ann_topk(emb, q, k=11, n_planes=8, probe_hamming=1).collect()
-    assert [(r.vec_id, r.cos_sim) for r in got] == [
-        (r.vec_id, r.cos_sim) for r in want
-    ]
 
 
 def test_ivf_index_probe_recall(corpus, tmp_path):
@@ -440,6 +438,15 @@ def test_pq_index_build_probe_and_staleness(corpus, tmp_path):
     # ensure must rebuild rather than trust a possibly-stale index
     assert sim.corpus_fingerprint(emb, {}) is None
     assert not sim.index_exists(path, None)
+
+
+def test_pq_single_subspace_equals_kmeans(corpus):
+    """One Lloyd core: a single-subspace PQ codebook is exactly the
+    k-means centroid set trained on the same sample."""
+    emb, _ = corpus
+    k, iters, n = 8, 3, 150
+    book = sim.pq_train(emb, m=1, k_codes=k, iters=iters, max_train=n)[0]
+    assert book == sim.kmeans_centroids(emb, k=k, iters=iters, max_train=n)
 
 
 def test_kmeans_raises_when_sample_smaller_than_k(corpus):

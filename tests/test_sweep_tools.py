@@ -296,29 +296,24 @@ def test_rotation_changed_no_oracle_stays_in_tail(rotation_mod, monkeypatch):
 
 
 def test_rotation_reproduces_committed_window(rotation_mod):
-    """The committed r16 _GATE_PRIORITY[:50] must equal the rotation
-    computed from the CORRECTNESS history truncated at r15 with the
-    FOURTEEN r16-changed names fronted — every name whose registered
-    plan or operator internals changed this round (the r15 advice:
-    the --changed set must be complete, not a subset): null-key-safe
-    bucketed asof merge, theilsen distinct-value pass 2, token-index
-    literal buckets, minhash-probe broadcast pins, pruned partition
-    discovery (lsh/ivf/recall/pipeline), single-orders-join IVM,
-    pre-aggregated GROUPING SETS, checkpointed+shuffle-hash NB scorer,
-    local-relation dims/trainer tables (range_join, bpe x2). Pins tool
-    and window to each other; the ``upto`` truncation makes the pin
-    permanent after CORRECTNESS_r16.json lands."""
+    """The committed r17 _GATE_PRIORITY[:50] must equal the rotation
+    computed from the CORRECTNESS history truncated at r16 with the
+    ELEVEN r17-changed names fronted — every registered name that
+    reaches an operator whose internals changed this round (the shared
+    similarity kernels: exact-rescore top-k, training collect, Lloyd,
+    nearest-centroid argmin, sign bits, block-pair cosine join). Pins
+    tool and window to each other; the ``upto`` truncation makes the
+    pin permanent after CORRECTNESS_r17.json lands."""
     from cdc_kafka_project_spark.registry import _GATE_PRIORITY
 
     ordered = [n for n, _ in rotation_mod.plan(
-        changed=["asof_join_cogrouped", "theilsen_revenue_slope",
-                 "text_index_topk", "dedup_minhash_index_probe",
-                 "similarity_ann_lsh", "similarity_ann_ivf",
-                 "similarity_ann_recall", "embedding_index_pipeline",
-                 "ivm_join_delta_revenue", "grouping_sets_sql",
-                 "doc_nb_quality_score", "range_join_price_bands",
-                 "bpe_merge_ranks", "doc_bpe_token_counts"],
-        upto=15)]
+        changed=["similarity_topk", "similarity_ann_lsh",
+                 "similarity_ann_ivf", "similarity_ann_pq",
+                 "similarity_ann_recall", "similarity_near_dup",
+                 "similarity_semdedup_keep", "similarity_hamming_rerank",
+                 "embedding_pca_project", "embedding_index_pipeline",
+                 "similarity_pairs_above"],
+        upto=16)]
     assert ordered[:50] == _GATE_PRIORITY[:50]
 
 

@@ -91,31 +91,6 @@ def test_doc_fingerprint_xx_flag_catches_impure_fingerprint(spark, monkeypatch):
     assert n_bad == out.count(), "impure fingerprint not caught by the flag"
 
 
-def test_hash_split_deterministic_disjoint_total(spark):
-    """Every key lands in exactly one split; assignment is identical
-    across runs and independent of partitioning; ratios are roughly as
-    requested."""
-    from cdc_kafka_project_spark.operators.text import hash_split
-
-    df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    w = {"train": 8, "val": 1, "test": 1}
-    a = hash_split(df, "doc_id", w)
-    b = hash_split(df.repartition(7), "doc_id", w)
-    ga = {r.doc_id: r.split for r in a.collect()}
-    gb = {r.doc_id: r.split for r in b.collect()}
-    assert ga == gb                      # partitioning-independent
-    assert set(ga.values()) == {"train", "val", "test"}
-    counts = {s: list(ga.values()).count(s) for s in w}
-    assert counts["train"] > 1400        # ~1600 expected
-    assert 100 < counts["val"] < 300     # ~200 expected
-    # stability under growth: adding rows never moves old keys
-    bigger = hash_split(
-        spark.range(0, 3000).withColumnRenamed("id", "doc_id"), "doc_id", w
-    )
-    gc = {r.doc_id: r.split for r in bigger.collect()}
-    assert all(gc[k] == v for k, v in ga.items())
-
-
 def test_pack_sequences_invariants(spark):
     """Every doc packed exactly once; no pack exceeds the budget unless
     it holds a single oversized doc; pack_seq is dense per pack."""
@@ -352,6 +327,9 @@ def test_hash_split_portable_properties(spark):
     a = dict(small.collect())
     b = dict(got.filter(F.col("doc_id") < 1000).collect())
     assert a == b
+    # partition-independent: repartitioning the input moves no key
+    c = tx.hash_split_portable(df.repartition(7), "doc_id", w)
+    assert dict(c.collect()) == dict(got.collect())
 
 
 def test_heavy_hitters_exact_when_capacity_sufficient(spark):
