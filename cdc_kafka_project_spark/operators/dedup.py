@@ -1,7 +1,8 @@
 """Deduplication for training-data pipelines (north-star extension).
 
-Four tiers, all pure column expressions / joins (no Python in the hot
-path), each with a different cost/recall point at 100 TB:
+Four tiers, each with a different cost/recall point at 100 TB. All are
+column expressions and joins except MinHash signing, which is one
+map-only ``mapInPandas`` pass per document:
 
 1. **exact** — group on an 8-byte content hash (xxhash64), confirm on
    full text. Shuffles hashes, not documents.
@@ -13,6 +14,11 @@ path), each with a different cost/recall point at 100 TB:
    all-pairs blowup never materializes. The scale path.
 4. **SimHash** — 64-bit weighted fingerprint; near-dups are pairs
    within small Hamming distance, found via band equi-joins too.
+
+Every banded generator (MinHash, SimHash, pHash in ``multimodal``,
+embedding LSH in ``similarity``) finds its candidates through one
+self-join, ``_band_join``; verification and pair dedup stay with each
+caller.
 
 MinHash permutations use (a*h + b) mod p with p = 2^31 - 1 — all
 intermediates fit in int64 so ANSI-mode overflow checking stays happy,
@@ -89,7 +95,7 @@ def word_shingles(
     Built with sequence+transform (codegen'd) then one explode — no
     Python. Documents shorter than n words produce no shingles.
 
-    The token array is materialized through an exchange (spread) before
+    The token array is written through an exchange (spread) before
     the transform: codegen otherwise inlines the split() into every
     ``__ws[i]`` access, turning shingling O(len^2) — and a single-file
     local read would run it all on one core.
@@ -100,16 +106,19 @@ def word_shingles(
         F.size("__ws") >= n
     )
     words = spread(words)
-    refs = ", ".join(f"__ws[i + {k}]" for k in range(n))
-    out = words.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, size(__ws) - {n}), i -> concat_ws(' ', {refs}))"
-            )
-        ).alias("shingle"),
-    )
+    out = words.select("doc_id", F.explode(_shingle_expr(n)).alias("shingle"))
     return out.distinct() if distinct else out
+
+
+def _shingle_expr(n: int) -> Column:
+    """array<string> of the word ``n``-grams of the token array
+    ``__ws`` (positions 0 .. size - n, words joined by one space). The
+    one shingle definition behind ``word_shingles`` and the one-pass
+    ``decontaminate``; callers guard ``size(__ws) >= n``."""
+    refs = ", ".join(f"__ws[i + {k}]" for k in range(n))
+    return F.expr(
+        f"transform(sequence(0, size(__ws) - {n}), i -> concat_ws(' ', {refs}))"
+    )
 
 
 def jaccard_pairs(
@@ -299,74 +308,63 @@ def _py_token_hash(w: str, b: int = 257, p: int = MERSENNE_P) -> int:
     return acc
 
 
+def _band_join(
+    df: DataFrame,
+    id_col: str,
+    band_keys: Column,
+    pair: tuple[str, str],
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one banded candidate join of every near-dup generator
+    (MinHash, SimHash and pHash here and in ``multimodal``, embedding
+    LSH in ``similarity``).
+
+    ``band_keys`` is a per-row array holding one key per band. It is
+    posexploded and self-joined on (band_id, key) with
+    ``a.<id_col> < b.<id_col>`` — a pure equi-join, shuffle-partitioned
+    on the band key, so the all-pairs blowup never materializes.
+    Returns ``pair[0]``, ``pair[1]`` (the two ids) and ``<c>_a``,
+    ``<c>_b`` for each ``carry`` column. A pair that collides in k
+    bands appears k times: verification and pair dedup are the
+    caller's, in the order its cost profile wants. ``df`` is read by
+    both join sides, so a caller whose ``df`` is more than a scan
+    materializes it first."""
+    banded = df.select(
+        id_col, *carry, F.posexplode(band_keys).alias("band_id", "key")
+    )
+    a, b = banded.alias("a"), banded.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band_id") == F.col("b.band_id"))
+        & (F.col("a.key") == F.col("b.key"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    ).select(
+        F.col(f"a.{id_col}").alias(pair[0]),
+        F.col(f"b.{id_col}").alias(pair[1]),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+
+
 def minhash_lsh_candidates(
-    signatures: DataFrame, bands: int = 16, rows: int = 4,
-    materialized: bool = False,
+    signatures: DataFrame, bands: int = 16, rows: int = 4
 ) -> DataFrame:
     """Candidate pairs via banded LSH: (doc_a, doc_b, est_jaccard).
 
     Each signature splits into ``bands`` bands of ``rows`` values; a
-    pair becomes a candidate iff some band hashes equal. The join key is
-    (band_id, band_hash) — a pure equi-join, shuffle-partitionable, no
-    quadratic blowup. est_jaccard = fraction of equal signature slots.
-
-    ``materialized=True``: the caller already checkpointed/persisted
-    ``signatures`` (re-checkpointing would copy the blocks).
-    """
-    num_perm = bands * rows
-    # The self-join below references the signature pipeline twice;
-    # signatures are tiny (num_perm ints per doc) relative to the corpus
-    # that produced them, so materialize once rather than recompute both
-    # sides. localCheckpoint (not persist): checkpointing avoids
-    # CacheManager entries entirely; the blocks are released
-    # deterministically by the scoped lifecycle (cache.py) when the
-    # owning query ends, so repeated invocations (bench runs every
-    # query twice) don't accumulate executor storage.
-    if not materialized:
-        signatures = cache.scoped_localcheckpoint(signatures)
-    banded = signatures.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col("sig")[i].cast("string")
-                                for i in range(b * rows, (b + 1) * rows)
-                            ],
-                        )
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_id", "band_hash"),
-    ).select("doc_id", "sig", "band_id", "band_hash")
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    eq = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
+    pair becomes a candidate iff some band hash (``_band_hash_array``,
+    the same keys the stored index holds) is equal. Pairs dedup before
+    scoring, so each pair's signatures are compared once;
+    est_jaccard = fraction of equal signature slots
+    (``est_jaccard_expr``). The caller materializes ``signatures``
+    (the band join reads it twice)."""
+    cand = _band_join(
+        signatures, "doc_id", _band_hash_array(bands, rows),
+        ("doc_a", "doc_b"), carry=("sig",),
+    ).dropDuplicates(["doc_a", "doc_b"])
     return cand.select(
-        "doc_a", "doc_b", (eq / F.lit(num_perm)).alias("est_jaccard")
+        "doc_a",
+        "doc_b",
+        est_jaccard_expr(F.col("sig_a"), F.col("sig_b")).alias("est_jaccard"),
     )
 
 
@@ -446,55 +444,27 @@ def simhash_hamming_pairs(
     fingerprints: DataFrame,
     max_distance: int = 8,
     bands: int = 4,
-    materialized: bool = False,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 64 bits into ``bands`` 16-bit
-    chunks (pigeonhole: distance <= bands-1 guarantees a shared band;
-    wider distances are caught with high probability), equi-join on
-    (band, chunk), verify exact Hamming distance with bit_count.
-
-    Pass ``materialized=True`` when the caller already checkpointed /
-    persisted ``fingerprints`` (re-checkpointing an identical frame
-    would copy its blocks and double the storage footprint)."""
+    """Near-dup pairs by SimHash: band the 64 bits of ``simhash`` into
+    ``bands`` chunks (pigeonhole: distance <= bands-1 guarantees a
+    shared band; wider distances are caught with high probability),
+    band-join on the chunks, verify exact Hamming distance with
+    bit_count. Returns (doc_a, doc_b, hamming int). The caller
+    materializes ``fingerprints`` (the band join reads it twice)."""
     width = 64 // bands
     mask = (1 << width) - 1
-    # Referenced twice by the self-join; localCheckpoint materializes
-    # once and the scoped lifecycle (cache.py) frees the blocks when
-    # the owning query ends (a .cache() here leaked storage across
-    # repeated invocations; bare localCheckpoint leaked until GC).
-    if not materialized:
-        fingerprints = cache.scoped_localcheckpoint(fingerprints)
-    banded = fingerprints.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("simhash", b * width)
-                    .bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_id", "chunk"),
+    chunks = F.array(
+        *[
+            F.shiftrightunsigned("simhash", b * width).bitwiseAND(F.lit(mask))
+            for b in range(bands)
+        ]
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
+    pairs = _band_join(
+        fingerprints, "doc_id", chunks, ("doc_a", "doc_b"), carry=("simhash",)
     )
     # Verify hamming BEFORE the pair dedup: the distance is a function
-    # of (sh_a, sh_b), carried identically on every duplicate emission
-    # of a pair, so filter-then-dropDuplicates is semantically
+    # of (simhash_a, simhash_b), carried identically on every duplicate
+    # emission of a pair, so filter-then-dropDuplicates is semantically
     # identical to dedup-then-filter — but the dedup exchange then
     # shuffles only the verified near-dup pairs instead of the raw
     # band-join fanout. On a corpus of mostly-dissimilar fingerprints
@@ -503,7 +473,7 @@ def simhash_hamming_pairs(
     # the unfiltered dropDuplicates), while the verified set is
     # near-linear; the filter itself is a codegen'd bit_count on the
     # streaming join output — no exchange.
-    dist = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    dist = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         pairs.withColumn("hamming", dist.cast("int"))
         .filter(F.col("hamming") <= max_distance)
@@ -535,7 +505,7 @@ def near_dedup_keep(
     to a shuffle anti-join there (same policy as ``decontaminate``).
     Returns ``df`` filtered, schema unchanged.
 
-    The pair frame is materialized once up front (localCheckpoint):
+    The pair frame is checkpointed once up front (localCheckpoint):
     pair generation is the expensive tier (LSH bands / cluster-scoped
     cosine / shingle joins), and the component iteration would
     otherwise re-evaluate that whole pipeline every round. The edge
@@ -593,7 +563,7 @@ def connected_components(
     # partition — the per-round checkpoint can be lazy: one Spark job
     # per round instead of two (the loop is job-count-bound on
     # pair-graph-sized inputs; a limit(1)-style probe would early-exit
-    # and leave a lazy checkpoint partially materialized).
+    # and leave a lazy checkpoint partially computed).
     def _label_sum(df: DataFrame):
         return df.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
@@ -704,18 +674,13 @@ def decontaminate(
     words = spread(
         train.select("doc_id", *keep_cols, tokens(text_col).alias("__ws"))
     )
-    refs = ", ".join(f"__ws[i + {k}]" for k in range(n))
     sh = words.select(
         "doc_id",
         *keep_cols,
         F.explode_outer(
-            F.when(
-                F.size("__ws") >= n,
-                F.expr(
-                    f"transform(sequence(0, size(__ws) - {n}),"
-                    f" i -> concat_ws(' ', {refs}))"
-                ),
-            ).otherwise(F.array().cast("array<string>"))
+            F.when(F.size("__ws") >= n, _shingle_expr(n)).otherwise(
+                F.array().cast("array<string>")
+            )
         ).alias("shingle"),
     )
     # no forced broadcast on the eval-shingle set (r11 ADVICE): like
@@ -821,10 +786,11 @@ def span_dedup(
 
 
 def _band_hash_array(bands: int, rows: int, sig_col: str = "sig"):
-    """array<long> of per-band hashes over a signature column — the
-    single definition both the batch self-join and the materialized
-    index use, so stored band hashes and probe-side band hashes can
-    never drift."""
+    """array<long> of per-band hashes over a signature column: xxhash64
+    of the band's ``rows`` slot values joined by commas. The one
+    definition behind ``minhash_lsh_candidates`` (batch self-join) and
+    ``minhash_band_table`` (stored index bands and probe bands), so
+    the three can never drift apart."""
     return F.array(
         *[
             F.xxhash64(
@@ -854,8 +820,9 @@ def minhash_band_table(
 
 
 def est_jaccard_expr(sig_a, sig_b):
-    """Fraction of agreeing signature slots — the MinHash Jaccard
-    estimator (shared by the self-join and index-probe verify tiers)."""
+    """Fraction of agreeing signature slots over the whole signature —
+    the MinHash Jaccard estimator of ``minhash_lsh_candidates`` and
+    ``probe_minhash_index``."""
     eq = F.aggregate(
         F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
         F.lit(0),
@@ -894,53 +861,45 @@ def ensure_minhash_index(
     rows with the rest. Incremental-ingest callers therefore manage
     their path explicitly via ``append_to_minhash_index`` and re-ensure
     only on full refresh."""
-    import os
-
     from cdc_kafka_project_spark.operators.similarity import ensure_index
 
+    model = {"kind": "minhash", "n": n, "num_perm": num_perm,
+             "bands": bands, "rows": rows}
+
     def build(path):
-        sigs = cache.scoped_localcheckpoint(
-            minhash_signatures(docs, n=n, num_perm=num_perm, with_digest=True)
-        )
-        try:
-            sigs.write.mode("overwrite").parquet(os.path.join(path, "sigs"))
-            minhash_band_table(sigs, bands=bands, rows=rows).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, "bands"))
-        finally:
-            # both consumers (the two writes) are done — the signature
-            # blocks are dead weight the moment the build returns
-            cache.release_checkpoint(sigs)
-        return {"kind": "minhash", "n": n, "num_perm": num_perm,
-                "bands": bands, "rows": rows}
+        _sign_into_index(docs, path, model, "overwrite")
+        return model
 
     # fmt 2 (r11): sigs/ carries a sha-256 content digest per doc, so
     # exact-tier probe verification serves from the index instead of
     # re-scanning the corpus; the bump makes pre-digest indexes read
     # as stale and rebuild on the next ensure_*
-    params = {"kind": "minhash", "n": n, "num_perm": num_perm,
-              "bands": bands, "rows": rows, "fmt": 2}
-    ensure_index(docs, path, params, build)
+    ensure_index(docs, path, {**model, "fmt": 2}, build)
 
 
 def append_to_minhash_index(new_docs: DataFrame, path: str) -> None:
     """O(delta) incremental maintenance: sign ONLY the arriving docs
     with the index's stored parameters and append — standing sigs and
     band rows are untouched."""
-    import os
-
     from cdc_kafka_project_spark.operators.similarity import read_model
 
-    m = read_model(path)
+    _sign_into_index(new_docs, path, read_model(path), "append")
+
+
+def _sign_into_index(docs: DataFrame, path: str, m: dict, mode: str) -> None:
+    """Sign ``docs`` (with digest) under the index parameters ``m`` and
+    write ``sigs/`` and ``bands/`` with save mode ``mode``. The
+    signatures are checkpointed for the two writes and released after
+    them, also when a write fails."""
+    import os
+
     sigs = cache.scoped_localcheckpoint(
-        minhash_signatures(
-            new_docs, n=m["n"], num_perm=m["num_perm"], with_digest=True
-        )
+        minhash_signatures(docs, n=m["n"], num_perm=m["num_perm"], with_digest=True)
     )
     try:
-        sigs.write.mode("append").parquet(os.path.join(path, "sigs"))
+        sigs.write.mode(mode).parquet(os.path.join(path, "sigs"))
         minhash_band_table(sigs, bands=m["bands"], rows=m["rows"]).write.mode(
-            "append"
+            mode
         ).parquet(os.path.join(path, "bands"))
     finally:
         cache.release_checkpoint(sigs)

@@ -42,6 +42,7 @@ from cdc_kafka_project_spark.functions import (
     spread as _spread_raw,
     to_double_array,
 )
+from cdc_kafka_project_spark.operators.dedup import _band_join
 
 #: Embedding scans do vectorized numpy/Arrow batch work, so a sub-32MB
 #: input's spread() exchange + full-width task wave costs more than a
@@ -908,20 +909,20 @@ def cosine_near_dup_pairs(
     round_to: int | None = 4,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via OR-amplified multi-band
-    hyperplane LSH — the embedding-space twin of MinHash-LSH banding
-    (``dedup.minhash_lsh_candidates``).
+    hyperplane LSH: (vec_a, vec_b, cos_sim). The embedding-space twin
+    of MinHash-LSH banding (``dedup.minhash_lsh_candidates``), through
+    the same band join (``dedup._band_join``).
 
     Each vector gets ``bands`` independent ``planes_per_band``-bit
     sign-pattern buckets; a pair becomes a candidate iff it collides in
-    *any* band (equi-join on (band_id, bucket)), then exact cosine
-    verifies. Collision probability per band is p^r with
+    *any* band, candidates dedup, then exact cosine verifies. Collision probability per band is p^r with
     p = 1 - theta/pi, so with the 16x16 default a true near-dup at
     cos 0.95 is caught with prob ~0.96 while a random orthogonal pair
     survives a band with prob 2^-16 — the intra-bucket join stays
     near-linear at any corpus size, where a single wide-bucket table
     (the old 8-plane/256-bucket shape) went quadratic per bucket.
 
-    The band table carries only (vec_id, band_id, bucket) — 24 bytes a
+    The band table carries only (vec_id, band_id, key) — 24 bytes a
     row — through the self-join; embeddings rejoin the (tiny) verified
     candidate list by key afterwards, so document vectors are never
     duplicated ``bands`` times through a shuffle.
@@ -937,28 +938,12 @@ def cosine_near_dup_pairs(
     emb = cache.scoped_localcheckpoint(
         spread(embeddings.select("vec_id", "embedding"))
     )
-    banded = emb.select(
+    cand = _band_join(
+        emb,
         "vec_id",
-        F.posexplode(
-            band_bucket_expr(
-                F.col("embedding"), planes, bands, planes_per_band
-            )
-        ).alias("band_id", "bucket"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
+        band_bucket_expr(F.col("embedding"), planes, bands, planes_per_band),
+        ("vec_a", "vec_b"),
+    ).dropDuplicates(["vec_a", "vec_b"])
     ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"))
     eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"))
     pairs = cand.join(ea, "vec_a").join(eb, "vec_b")

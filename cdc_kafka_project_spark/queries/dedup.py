@@ -24,6 +24,34 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
 
+def _with_injected_copies(docs: DataFrame, n: int) -> DataFrame:
+    """``docs`` (doc_id, text) plus byte-identical copies of its first
+    ``n`` docs by id, re-emitted under ``-doc_id - 1`` (the
+    collision-free fixture scheme: organic ids are non-negative). The
+    copies are checkpointed, so deriving the union does not re-scan
+    the corpus for the copies branch."""
+    injected = cache.scoped_localcheckpoint(
+        docs.orderBy("doc_id")
+        .limit(n)
+        .select((-F.col("doc_id") - F.lit(1)).alias("doc_id"), "text")
+    )
+    return docs.unionByName(injected)
+
+
+def _digest_verified(cand: DataFrame, table: DataFrame, digest: str) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b, ...) whose two docs carry equal
+    sha-256 content digests in ``table``'s ``digest`` column — the
+    exact-duplicate tier (collision probability ~2^-128). The digests
+    ride the one signing pass, so verifying re-reads no corpus text."""
+    da = table.select(F.col("doc_id").alias("doc_a"), F.col(digest).alias("__da"))
+    db = table.select(F.col("doc_id").alias("doc_b"), F.col(digest).alias("__db"))
+    return (
+        cand.join(da, "doc_a")
+        .join(db, "doc_b")
+        .filter(F.col("__da") == F.col("__db"))
+    )
+
+
 @query(
     "dedup_exact_groups",
     oracle="""
@@ -139,25 +167,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.trim("text") != "")
         & (F.size(F.split(F.trim("text"), r"\s+")) >= 3)
     )
-    injected = cache.scoped_localcheckpoint(
-        docs.orderBy("doc_id")
-        .limit(N_MINHASH_DUPS)
-        .select((-F.col("doc_id") - F.lit(1)).alias("doc_id"), "text")
-    )
-    full = docs.unionByName(injected)
+    full = _with_injected_copies(docs, N_MINHASH_DUPS)
     sigs = cache.scoped_localcheckpoint(
         dd.minhash_signatures(full, n=3, num_perm=64, with_digest=True)
     )
-    cand = dd.minhash_lsh_candidates(
-        sigs.select("doc_id", "sig"), bands=16, rows=4, materialized=True
-    )
-    da = sigs.select(F.col("doc_id").alias("doc_a"), F.col("digest").alias("__da"))
-    db = sigs.select(F.col("doc_id").alias("doc_b"), F.col("digest").alias("__db"))
-    return (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .filter(F.col("__da") == F.col("__db"))
-        .select("doc_a", "doc_b", F.col("est_jaccard").cast("double").alias("est_jaccard"))
+    cand = dd.minhash_lsh_candidates(sigs.select("doc_id", "sig"), bands=16, rows=4)
+    return _digest_verified(cand, sigs, "digest").select(
+        "doc_a", "doc_b", F.col("est_jaccard").cast("double").alias("est_jaccard")
     )
 
 
@@ -290,30 +306,17 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select("doc_id", "text").filter(
         F.trim("text") != ""
     )
-    # the injected frame is tiny (N rows) — checkpoint it so deriving
-    # `full` does not re-scan the corpus for the copies branch
-    injected = cache.scoped_localcheckpoint(
-        docs.orderBy("doc_id")
-        .limit(N_SIMHASH_DUPS)
-        .select((-F.col("doc_id") - F.lit(1)).alias("doc_id"), "text")
-    )
-    full = docs.unionByName(injected).withColumn(
+    full = _with_injected_copies(docs, N_SIMHASH_DUPS).withColumn(
         "__digest", F.sha2("text", 256)
     )
     fps = cache.scoped_localcheckpoint(
         dd.simhash(full, carry=("__digest",))
     )
     cand = dd.simhash_hamming_pairs(
-        fps.select("doc_id", "simhash"), max_distance=8, bands=4,
-        materialized=True,
+        fps.select("doc_id", "simhash"), max_distance=8, bands=4
     )
-    da = fps.select(F.col("doc_id").alias("doc_a"), F.col("__digest").alias("__da"))
-    db = fps.select(F.col("doc_id").alias("doc_b"), F.col("__digest").alias("__db"))
-    return (
-        cand.join(da, "doc_a")
-        .join(db, "doc_b")
-        .filter(F.col("__da") == F.col("__db"))
-        .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
+    return _digest_verified(cand, fps, "__digest").select(
+        "doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming")
     )
 
 

@@ -107,30 +107,32 @@ def load_all() -> None:
 # filter; names not listed here sort after the listed ones.
 _GATE_PRIORITY: list[str] = [
     # -- ROUND-17 WINDOW (standing rotation; computed by
-    #    tools/plan_gate_rotation.py --changed <the 11 names that
-    #    reach an operator edited this round: the similarity kernels
-    #    shared in operators/similarity.py — exact-rescore top-k,
-    #    training collect, Lloyd, nearest-centroid argmin, sign bits,
-    #    block-pair cosine join>. Their plans are unchanged; they
-    #    front the window because their operator internals changed.
+    #    tools/plan_gate_rotation.py --changed <the 15 names that
+    #    reach an operator edited this round: the one banded candidate
+    #    join (MinHash, SimHash, pHash, embedding LSH), the MinHash band
+    #    hash / estimator / index sign-and-write, the shared word-shingle
+    #    expression and the dedup queries' fixture and digest helpers>.
+    #    They front the window because their operator internals changed.
     #    Then oracle-backed names by staleness (oldest newest-driver-
     #    row first, alphabetical within a round). --
-    "similarity_topk",  # changed-this-round (r13)
-    "similarity_ann_lsh",  # changed-this-round (r16)
-    "similarity_ann_ivf",  # changed-this-round (r16)
-    "similarity_ann_pq",  # changed-this-round (r13)
-    "similarity_ann_recall",  # changed-this-round (r16)
+    "dedup_minhash_lsh",  # changed-this-round (r12)
+    "dedup_simhash_pairs",  # changed-this-round (r14)
+    "media_phash_dup_pairs",  # changed-this-round (r15)
     "similarity_near_dup",  # changed-this-round (r15)
-    "similarity_semdedup_keep",  # changed-this-round (r16)
-    "similarity_hamming_rerank",  # changed-this-round (r12)
-    "embedding_pca_project",  # changed-this-round (r14)
-    "embedding_index_pipeline",  # changed-this-round (r16)
-    "similarity_pairs_above",  # changed-this-round (r14)
+    "dedup_minhash_index_probe",  # changed-this-round (r16)
+    "doc_decontaminate",  # changed-this-round (r12)
+    "doc_contamination_hits",  # changed-this-round (r13)
+    "curation_pipeline",  # changed-this-round (r16)
+    "dedup_ngram_jaccard",  # changed-this-round (r14)
+    "dedup_near_keep",  # changed-this-round (r15)
+    "dedup_components",  # changed-this-round (r15)
+    "doc_ngram_novelty",  # changed-this-round (r14)
+    "vocab_growth_curve",  # changed-this-round (r16)
+    "doc_boilerplate_fraction",  # changed-this-round (r14)
+    "dedup_levenshtein_verify",  # changed-this-round (r14)
     "dedup_incremental_new_docs",  # r12
-    "dedup_minhash_lsh",  # r12
     "denormalized_order_lines",  # r12
     "doc_bigram_logprob",  # r12
-    "doc_decontaminate",  # r12
     "doc_fingerprint_xx",  # r12
     "doc_span_dedup",  # r12
     "doc_stratified_split",  # r12
@@ -160,21 +162,21 @@ _GATE_PRIORITY: list[str] = [
     "rolling_7d_user_spend",  # r12
     "session_window_native",  # r12
     "shard_assignment_by_bytes",  # r12
+    "similarity_hamming_rerank",  # r12
     "split_leakage_audit",  # r12
     "unpivot_lineitem_measures",  # r12
-    "winsorized_price_stats",  # r12
-    "asof_join_next_purchase",  # r13
-    "asof_join_purchases",  # r13
     # -- BEHIND THE ROTATION, by staleness (oldest driver row
     #    first, alphabetical within a round); no-oracle names
     #    sort after every oracle-backed name (pinned rule 3). --
+    "winsorized_price_stats",  # r12
+    "asof_join_next_purchase",  # r13
+    "asof_join_purchases",  # r13
     "column_profile",  # r13
     "corr_lineitem_measures",  # r13
     "dedup_exact_groups",  # r13
     "dedup_exact_keep",  # r13
     "dedup_keep_longest",  # r13
     "distinct_counts",  # r13
-    "doc_contamination_hits",  # r13
     "event_props_extract",  # r13
     "event_props_typed",  # r13
     "exact_moments",  # r13
@@ -201,6 +203,8 @@ _GATE_PRIORITY: list[str] = [
     "set_except_keys",  # r13
     "set_intersect_keys",  # r13
     "set_union_active_keys",  # r13
+    "similarity_ann_pq",  # r13
+    "similarity_topk",  # r13
     "string_funcs",  # r13
     "token_frequency_top100",  # r13
     "topk_orders",  # r13
@@ -215,16 +219,11 @@ _GATE_PRIORITY: list[str] = [
     "customer_rfm_quantile_scores",  # r14
     "customer_rfm_segments",  # r14
     "daily_revenue_acf",  # r14
-    "dedup_levenshtein_verify",  # r14
-    "dedup_ngram_jaccard",  # r14
     "dedup_normalized_groups",  # r14
     "dedup_simhash",  # r14
-    "dedup_simhash_pairs",  # r14
-    "doc_boilerplate_fraction",  # r14
     "doc_chunks",  # r14
     "doc_fingerprint_md5",  # r14
     "doc_host_stats",  # r14
-    "doc_ngram_novelty",  # r14
     "doc_pack_assignments",  # r14
     "doc_pii_redact",  # r14
     "doc_quality_filter",  # r14
@@ -239,6 +238,7 @@ _GATE_PRIORITY: list[str] = [
     "doc_winnow_fingerprints",  # r14
     "embedding_label_centroids",  # r14
     "embedding_norms",  # r14
+    "embedding_pca_project",  # r14
     "event_value_anomalies",  # r14
     "group_minmax_norm",  # r14
     "heavy_hitter_tokens",  # r14
@@ -247,6 +247,7 @@ _GATE_PRIORITY: list[str] = [
     "media_decode_features",  # r14
     "media_frame_sample",  # r14
     "media_resize",  # r14
+    "similarity_pairs_above",  # r14
     "skewed_salted_segment_revenue",  # r14
     "asof_last_purchase",  # r15
     "bm25_topk",  # r15
@@ -258,8 +259,6 @@ _GATE_PRIORITY: list[str] = [
     "cdc_replica",  # r15
     "cdc_running_totals",  # r15
     "cdc_snapshot_diff",  # r15
-    "dedup_components",  # r15
-    "dedup_near_keep",  # r15
     "embedding_label_outliers",  # r15
     "embedding_quantize_int8",  # r15
     "event_top_paths",  # r15
@@ -274,7 +273,6 @@ _GATE_PRIORITY: list[str] = [
     "lang_id",  # r15
     "langid_confusion",  # r15
     "lateral_topk_per_customer",  # r15
-    "media_phash_dup_pairs",  # r15
     "null_semantics_probe",  # r15
     "order_priority_chi2",  # r15
     "pagerank_brand_copurchase",  # r15
@@ -306,11 +304,10 @@ _GATE_PRIORITY: list[str] = [
     "corpus_source_report",  # r16
     "cube_agg",  # r16
     "curation_funnel_report",  # r16
-    "curation_pipeline",  # r16
     "date_exprs",  # r16
-    "dedup_minhash_index_probe",  # r16
     "doc_bpe_token_counts",  # r16
     "doc_nb_quality_score",  # r16
+    "embedding_index_pipeline",  # r16
     "event_value_psi_drift",  # r16
     "funnel_view_click_purchase",  # r16
     "grouping_sets_sql",  # r16
@@ -325,6 +322,10 @@ _GATE_PRIORITY: list[str] = [
     "revenue_seasonality_decomp",  # r16
     "rolling_median_revenue",  # r16
     "semantic_decontaminate",  # r16
+    "similarity_ann_ivf",  # r16
+    "similarity_ann_lsh",  # r16
+    "similarity_ann_recall",  # r16
+    "similarity_semdedup_keep",  # r16
     "sketch_incremental_distinct",  # r16
     "sketch_user_overlap",  # r16
     "source_distinctive_terms",  # r16
@@ -334,7 +335,6 @@ _GATE_PRIORITY: list[str] = [
     "text_tfidf_top_terms",  # r16
     "theilsen_revenue_slope",  # r16
     "user_growth_accounting",  # r16
-    "vocab_growth_curve",  # r16
     "weekend_effect_ttest",  # r16
     "zipf_slope",  # r16
 ]

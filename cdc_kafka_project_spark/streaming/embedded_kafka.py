@@ -284,12 +284,7 @@ class EmbeddedLog:
         # Capture the per-partition high offsets EAGERLY, while the
         # checkpoint is certainly alive — commit() then never needs to
         # re-read the frame. Bounded: <= max_messages rows.
-        hi = {
-            int(r.partition): int(r.hi)
-            for r in batch.groupBy("partition")
-            .agg(F.max("offset").alias("hi"))
-            .collect()
-        }
+        hi = _high_offsets(batch)
         prev = self._last_poll.pop((group, topic), None)
         if prev is not None:
             cache.free_owned_checkpoint(prev[0])
@@ -310,12 +305,7 @@ class EmbeddedLog:
         if entry is not None and entry[0] is batch:
             hi = entry[1]
         else:
-            hi = {
-                int(r.partition): int(r.hi)
-                for r in batch.groupBy("partition")
-                .agg(F.max("offset").alias("hi"))
-                .collect()
-            }
+            hi = _high_offsets(batch)
         state = self._group_state(group)
         offsets = state.setdefault("topics", {}).setdefault(topic, {})
         for part, h in hi.items():
@@ -357,3 +347,11 @@ class EmbeddedLog:
 
     def _committed(self, group: str, topic: str) -> dict:
         return self._group_state(group).get("topics", {}).get(topic, {})
+
+
+def _high_offsets(batch: DataFrame) -> dict[int, int]:
+    """partition -> highest offset in ``batch`` (one aggregate job)."""
+    return {
+        int(r.partition): int(r.hi)
+        for r in batch.groupBy("partition").agg(F.max("offset").alias("hi")).collect()
+    }

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from cdc_kafka_project_spark.operators.cdc import latest_per_key
+
 
 def stateful_shuffle_width(spark: SparkSession, n_groups: int) -> int:
     """State-store partition count for a stateful stream grouped on a
@@ -116,13 +118,9 @@ def latest_totals(
 ) -> DataFrame:
     """Current running total per group: the newest emission wins
     (update-mode log -> latest-state view, same pattern as the CDC
-    replica)."""
-    from pyspark.sql import Window
-
+    replica: ``cdc.latest_per_key`` keyed on the group, newest
+    ``__epoch`` first)."""
     log = spark.read.parquet(out_dir)
-    w = Window.partitionBy(group_col).orderBy(F.col("__epoch").desc())
-    return (
-        log.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(group_col, "total_salary")
+    return latest_per_key(log, [group_col], ["__epoch"]).select(
+        group_col, "total_salary"
     )

@@ -90,6 +90,34 @@ def test_minhash_estimates_track_exact_jaccard(docs):
     assert cand[(0, 2)] == pytest.approx(_jaccard(BASE, NEAR), abs=0.25)
 
 
+@pytest.mark.parametrize("bands,rows", [(16, 4), (32, 2)])
+def test_self_join_band_keys_match_stored_index_bands(docs, bands, rows):
+    """Self-join band keys never drift from stored index band keys: the
+    candidate pairs of minhash_lsh_candidates equal the pairs found by
+    self-joining minhash_band_table (the rows the index stores and the
+    probe emits) over the same signatures."""
+    sigs = dd.minhash_signatures(docs, n=3, num_perm=64)
+    got = {
+        (r.doc_a, r.doc_b)
+        for r in dd.minhash_lsh_candidates(sigs, bands=bands, rows=rows).collect()
+    }
+    t = dd.minhash_band_table(sigs, bands=bands, rows=rows)
+    a, b = t.alias("a"), t.alias("b")
+    want = {
+        (r[0], r[1])
+        for r in a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select("a.doc_id", "b.doc_id")
+        .collect()
+    }
+    assert {(0, 1), (0, 4), (1, 4)} <= got
+    assert got == want
+
+
 def test_minhash_signature_is_deterministic(docs):
     a = dd.minhash_signatures(docs).filter(F.col("doc_id") == 0).collect()[0].sig
     b = dd.minhash_signatures(docs).filter(F.col("doc_id") == 0).collect()[0].sig

@@ -134,7 +134,9 @@ def test_phash_identical_payloads_hamming_zero(spark):
     media = spark.createDataFrame(
         rows, "media_id long, kind string, payload binary"
     )
-    pairs = mm.phash_dup_pairs(mm.phash_bands(media), max_hamming=3).collect()
+    df = mm.phash_dup_pairs(mm.phash_bands(media), max_hamming=3)
+    assert dict(df.dtypes)["hamming"] == "bigint"
+    pairs = df.collect()
     assert [(r.media_a, r.media_b, r.hamming) for r in pairs] == [(0, 1, 0)]
 
 
@@ -158,5 +160,7 @@ def test_phash_band_join_completeness_bound(spark):
          (1, "image", bytearray(other.tobytes()))],
         "media_id long, kind string, payload binary",
     )
-    pairs = mm.phash_dup_pairs(mm.phash_bands(media), max_hamming=3).collect()
+    df = mm.phash_dup_pairs(mm.phash_bands(media), max_hamming=3)
+    assert dict(df.dtypes)["hamming"] == "bigint"
+    pairs = df.collect()
     assert [(r.media_a, r.media_b, r.hamming) for r in pairs] == [(0, 1, 3)]

@@ -238,13 +238,33 @@ def test_malformed_shuffle_partitions_env_names_the_var(monkeypatch):
 
 def test_rotation_stale_check_scans_full_window(rotation_mod):
     """r13 advisor (low): the stale-by-one-round disambiguation only
-    tried fronted-prefix sizes 0..10; it must scan up to the full
-    WINDOW so a round that fronted >10 names is still recognized."""
+    tried fronted-prefix sizes 0..10; it must scan every size below the
+    full WINDOW so a round that fronted >10 names is still recognized.
+    k = WINDOW itself is excluded: an all-fronted prefix matches any
+    window, which made every mismatch read as stale-by-one."""
     import inspect
 
     src = inspect.getsource(rotation_mod.main)
-    assert "range(0, WINDOW + 1)" in src
+    assert "range(0, WINDOW)" in src
+    assert "range(0, WINDOW + 1)" not in src
     assert "range(0, 11)" not in src
+
+
+def test_rotation_bare_check_passes_on_committed_window(
+    rotation_mod, monkeypatch, capsys
+):
+    """``--check`` without ``--changed`` must accept the committed
+    window: it reads the fronted names from the ``# changed-this-round``
+    tags in registry.py. The history is truncated at r16 (the round the
+    committed window was computed from), like the pin below."""
+    newest_rows = rotation_mod.newest_rows
+    monkeypatch.setattr(
+        rotation_mod, "newest_rows",
+        lambda upto=None: newest_rows(16 if upto is None else min(upto, 16)),
+    )
+    monkeypatch.setattr(rotation_mod, "latest_round", lambda: 16)
+    monkeypatch.setattr("sys.argv", ["plan_gate_rotation.py", "--check"])
+    assert rotation_mod.main() == 0, capsys.readouterr().out
 
 
 @pytest.fixture(scope="module")
@@ -298,21 +318,25 @@ def test_rotation_changed_no_oracle_stays_in_tail(rotation_mod, monkeypatch):
 def test_rotation_reproduces_committed_window(rotation_mod):
     """The committed r17 _GATE_PRIORITY[:50] must equal the rotation
     computed from the CORRECTNESS history truncated at r16 with the
-    ELEVEN r17-changed names fronted — every registered name that
-    reaches an operator whose internals changed this round (the shared
-    similarity kernels: exact-rescore top-k, training collect, Lloyd,
-    nearest-centroid argmin, sign bits, block-pair cosine join). Pins
-    tool and window to each other; the ``upto`` truncation makes the
-    pin permanent after CORRECTNESS_r17.json lands."""
+    FIFTEEN changed names fronted — every registered name that reaches
+    an operator whose internals changed (the one banded candidate join
+    behind MinHash, SimHash, pHash and embedding-LSH pairs; the MinHash
+    band hash, estimator and index sign-and-write; the shared
+    word-shingle expression; the dedup queries' fixture and digest
+    helpers). Pins tool and window to each other; the ``upto``
+    truncation makes the pin permanent after CORRECTNESS_r17.json
+    lands."""
     from cdc_kafka_project_spark.registry import _GATE_PRIORITY
 
     ordered = [n for n, _ in rotation_mod.plan(
-        changed=["similarity_topk", "similarity_ann_lsh",
-                 "similarity_ann_ivf", "similarity_ann_pq",
-                 "similarity_ann_recall", "similarity_near_dup",
-                 "similarity_semdedup_keep", "similarity_hamming_rerank",
-                 "embedding_pca_project", "embedding_index_pipeline",
-                 "similarity_pairs_above"],
+        changed=["dedup_minhash_lsh", "dedup_simhash_pairs",
+                 "media_phash_dup_pairs", "similarity_near_dup",
+                 "dedup_minhash_index_probe", "doc_decontaminate",
+                 "doc_contamination_hits", "curation_pipeline",
+                 "dedup_ngram_jaccard", "dedup_near_keep",
+                 "dedup_components", "doc_ngram_novelty",
+                 "vocab_growth_curve", "doc_boilerplate_fraction",
+                 "dedup_levenshtein_verify"],
         upto=16)]
     assert ordered[:50] == _GATE_PRIORITY[:50]
 

@@ -21,7 +21,9 @@ Output: the ordered window (with per-name provenance) plus the full
 permutation tail summary. --check instead verifies that
 registry._GATE_PRIORITY's induced order already IS the computed one
 for the window slice, and exits nonzero with a diff if not — run it
-at round start, paste the emitted list, re-run with --check.
+at round start, paste the emitted list, re-run with --check. Without
+--changed, --check takes the fronted names from the
+``# changed-this-round`` tags this tool writes into the pasted list.
 """
 
 from __future__ import annotations
@@ -121,6 +123,14 @@ def plan(changed: list[str], upto: int | None = None) -> list[tuple[str, str]]:
     return out
 
 
+def tagged_changed() -> list[str]:
+    """The fronted names of the committed window, in order: the
+    ``_GATE_PRIORITY`` entries of registry.py tagged
+    ``# changed-this-round`` (the provenance this tool prints)."""
+    src = open(os.path.join(ROOT, "cdc_kafka_project_spark", "registry.py")).read()
+    return re.findall(r'^\s*"([^"]+)",\s*# changed-this-round', src, re.M)
+
+
 def main() -> int:
     args = sys.argv[1:]
     changed: list[str] = []
@@ -129,6 +139,8 @@ def main() -> int:
         changed = [n for n in args[i + 1].split(",") if n]
         args = args[:i] + args[i + 2 :]
     check = "--check" in args
+    if check and not changed:
+        changed = tagged_changed()
 
     ordered = plan(changed)
     window = ordered[:WINDOW]
@@ -150,22 +162,19 @@ def main() -> int:
         # the registry still holds the rN window while the tool now
         # computes rN+1 — stale by exactly one round, NOT a failed
         # invariant. Detect it by recomputing against the history
-        # truncated before rN. (Only exact for the no-fronted case —
-        # the committed window's fronted names aren't recoverable from
-        # history — so also try last round's window with the current
-        # --changed list fronted.)
-        # The committed window's fronted (changed-last-round) names
-        # aren't recoverable from history, so treat each prefix of the
-        # registry window as the candidate fronted set and test
+        # truncated before rN. The history does not record which
+        # names the committed window fronted, so treat each prefix of
+        # the registry window as the candidate fronted set and test
         # whether the remainder is exactly last round's computed
         # staleness order.
         latest = latest_round()
         if latest > 0:
-            # Try every possible fronted-prefix size up to the full
-            # window (r13 advisor: a committed window that fronted
-            # more than 10 changed names was misreported as
-            # never-rotated instead of stale-by-one).
-            for k in range(0, WINDOW + 1):
+            # Try every fronted-prefix size below the full window (r13
+            # advisor: a committed window that fronted more than 10
+            # changed names was misreported as never-rotated instead of
+            # stale-by-one). k = WINDOW is excluded: a window that is
+            # all prefix matches any window.
+            for k in range(0, WINDOW):
                 try:
                     prev = [
                         n for n, _ in plan(got[:k], upto=latest - 1)
